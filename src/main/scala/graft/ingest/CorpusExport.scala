@@ -1,6 +1,7 @@
 package graft.ingest
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -66,39 +67,68 @@ object CorpusExport {
     * classic .json.gz corpus layout, "zstd" where the JVM ships the
     * codec, default "none") — shard sizes are computed on the
     * UNCOMPRESSED payload, the stable quantity a token-budgeted
-    * loader cares about. Returns the manifest of what was written. */
+    * loader cares about. Returns the shipped manifest, read back from
+    * `<path>/_manifest` (one row per shard, in (lang, shard) order). */
   def exportJsonl(docs: DataFrame, path: String, targetBytes: Long,
       codec: String = "none"): DataFrame = {
-    val sharded = assignShards(docs, targetBytes)
-    sharded
+    // the shard plan runs ONCE: the JSONL write and the manifest both
+    // read this materialized frame. localCheckpoint, not persist(): a
+    // cached plan loses AQE's partition coalescing, so the write would
+    // run one task per session shuffle partition
+    val planned = assignShards(docs, targetBytes)
       .repartition(col("lang"), col("shard"))
-      .write.partitionBy("lang", "shard")
-      .option("compression", codec)
-      .mode("overwrite")
-      .json(path)
-    // the manifest ships WITH the corpus: an underscore-prefixed
-    // directory is invisible to Spark/Hadoop file readers, so
-    // importJsonl's glob never sees it
-    val m = manifest(sharded)
-    m.coalesce(1).write.mode("overwrite").parquet(s"$path/_manifest")
-    m
+      .localCheckpoint()
+    try {
+      planned.write.partitionBy("lang", "shard")
+        .option("compression", codec)
+        .mode("overwrite")
+        .json(path)
+      // the manifest ships WITH the corpus: an underscore-prefixed
+      // directory is invisible to Spark/Hadoop file readers, so
+      // importJsonl's glob never sees it. One file, ordered inside its
+      // single partition — no global range sort for a shards-sized table
+      shardTotals(planned).coalesce(1)
+        .sortWithinPartitions(col("lang"), col("shard"))
+        .write.mode("overwrite").parquet(s"$path/_manifest")
+    } finally releaseCheckpoint(planned)
+    docs.sparkSession.read.parquet(s"$path/_manifest")
   }
+
+  /** Drop a localCheckpoint's blocks now rather than at the
+    * ContextCleaner's next GC-driven sweep. */
+  private def releaseCheckpoint(df: DataFrame): Unit =
+    df.queryExecution.logical match {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 
   /** Loader-side integrity check: recompute the manifest from the
     * files actually on disk and diff it against the one the export
     * shipped. Returns the discrepancies (empty = the corpus is
     * exactly what the writer accounted for — any lost/truncated/
     * duplicated shard or mutated doc shows up as a row here, because
-    * the content fingerprint is an exact integer sum). */
+    * the content fingerprint is an exact integer sum).
+    *
+    * The diff is a multiset difference both ways (`exceptAll`
+    * semantics) in ONE aggregate over one scan: shipped rows weigh +1,
+    * recomputed rows -1, and a manifest row whose weights do not
+    * cancel comes back |weight| times, tagged `shipped` (surplus in
+    * the shipped manifest) or `on_disk` (surplus on disk). */
   def verifyExport(s: SparkSession, path: String): DataFrame = {
     // an integrity checker must see the directory as it IS, not as the
     // session's file-status cache remembers it
     s.catalog.refreshByPath(path)
     val shipped = s.read.parquet(s"$path/_manifest")
-    val recomputed = manifest(importJsonl(s, path)
+    val recomputed = shardTotals(importJsonl(s, path)
       .withColumn("lang", col("lang").cast("string")))
-    shipped.exceptAll(recomputed).withColumn("side", lit("shipped"))
-      .unionByName(recomputed.exceptAll(shipped).withColumn("side", lit("on_disk")))
+    val keys = shipped.columns.toSeq.map(col)
+    shipped.withColumn("w", lit(1L))
+      .unionByName(recomputed.withColumn("w", lit(-1L)))
+      .groupBy(keys: _*).agg(sum(col("w")).as("w"))
+      .filter(col("w") =!= 0)
+      .select(keys :+ explode(array_repeat(
+        when(col("w") > 0, lit("shipped")).otherwise(lit("on_disk")),
+        abs(col("w")).cast("int"))).as("side"): _*)
   }
 
   /** Per-shard accounting a loader can verify against: doc count,
@@ -106,13 +136,16 @@ object CorpusExport {
     * (exact integer sum of per-doc xxhash64 — bit-stable no matter
     * how many readers split the shard). */
   def manifest(sharded: DataFrame): DataFrame =
+    shardTotals(sharded).orderBy(col("lang"), col("shard"))
+
+  /** [[manifest]]'s rows in no particular order. */
+  private def shardTotals(sharded: DataFrame): DataFrame =
     sharded.groupBy(col("lang"), col("shard"))
       .agg(
         count(lit(1)).as("n_docs"),
         sum(docBytes).as("n_bytes"),
         sum(xxhash64(col("doc_id"), col("text")).cast("decimal(38,0)"))
           .as("content_fp"))
-      .orderBy(col("lang"), col("shard"))
 
   /** The parquet-side schema of the exported payload columns (the
     * partition columns `lang`/`shard` come back from the directory

@@ -19,8 +19,9 @@ import org.apache.spark.sql.functions._
   * and the page scan switches to [[Multistream.readPages]] — one task
   * per bz2 stream instead of one task per (non-splittable) file; the
   * rest of the pipeline is byte-identical (MultistreamSpec's frame
-  * equality). The siteinfo/namespace read stays on the XML source —
-  * the header is stream 0, a single tiny decode.
+  * equality). The siteinfo/namespace read switches to
+  * [[Multistream.readNamespaces]]: one driver-side decode of bz2
+  * stream 0, the header by format, with no index read and no Spark job.
   */
 object ImportDump {
   def main(args: Array[String]): Unit = {
@@ -39,8 +40,8 @@ object ImportDump {
     spark.sparkContext.setLogLevel("WARN")
 
     val obs = org.apache.spark.sql.Observation("import")
-    // multistream index present -> splittable parallel scan (A15);
-    // header-only namespace decode rides the same index
+    // multistream index present -> splittable parallel scan (A15) and
+    // a namespace read of the header stream alone
     val msIndex = sys.env.get("SPARK_GRAFT_MULTISTREAM_INDEX")
     val pages = msIndex match {
       case Some(idx) => Multistream.readPages(spark, dump, idx)

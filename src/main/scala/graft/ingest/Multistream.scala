@@ -116,7 +116,7 @@ object Multistream {
   }
 
   /** Driver-side convenience over [[streamRangesDS]] — FIXTURE-SCALE
-    * use (specs, the header probe): collects the full range list. The
+    * use (specs): collects the full range list. The
     * ingest path itself never materializes it ([[readPages]] maps over
     * the Dataset). */
   def streamRanges(spark: SparkSession, dumpPath: String,
@@ -156,21 +156,6 @@ object Multistream {
     new java.io.InputStreamReader(bz, java.nio.charset.StandardCharsets.UTF_8)
   }
 
-  /** Decode one bz2 stream range into a String — header-stream use
-    * only (the siteinfo stream is one small bz2 block by format). The
-    * page path never materializes a stream: see [[streamPagesRange]]. */
-  private def decodeRange(conf: org.apache.hadoop.conf.Configuration,
-      dumpPath: String, start: Long, end: Long): String = {
-    val r = openRange(conf, dumpPath, start, end)
-    try {
-      val sb = new java.lang.StringBuilder
-      val chunk = new Array[Char](64 * 1024)
-      var n = r.read(chunk)
-      while (n >= 0) { sb.append(chunk, 0, n); n = r.read(chunk) }
-      sb.toString
-    } finally r.close()
-  }
-
   /** Bounded-memory page iterator over one bz2 stream range: decode
     * and scan in one pass, emitting each `<page>…</page>` as found and
     * compacting the scan buffer behind it. Peak allocation is one page
@@ -183,15 +168,20 @@ object Multistream {
     val reader = openRange(conf, dumpPath, start, end)
     var closed = false
     def closeNow(): Unit = if (!closed) { closed = true; reader.close() }
+    // close on any abrupt exit without catching it: a fatal error or an
+    // interrupt still propagates untouched
+    def closingOnFailure[A](f: => A): A = {
+      var ok = false
+      try { val a = f; ok = true; a } finally if (!ok) closeNow()
+    }
     val it = splitPagesStream(reader)
     new Iterator[String] {
       def hasNext: Boolean = {
-        val h = try it.hasNext catch { case e: Throwable => closeNow(); throw e }
+        val h = closingOnFailure(it.hasNext)
         if (!h) closeNow()
         h
       }
-      def next(): String =
-        try it.next() catch { case e: Throwable => closeNow(); throw e }
+      def next(): String = closingOnFailure(it.next())
     }
   }
 
@@ -254,24 +244,39 @@ object Multistream {
       }
     }
 
+  /** The header's XML: bz2 stream 0 by format, decoded on the driver
+    * with `decompressConcatenated = false`, so the decoder stops at that
+    * stream's end-of-stream marker and never reads a page stream. */
+  private def readHeaderStream(conf: org.apache.hadoop.conf.Configuration,
+      dumpPath: String): String = {
+    val path = new org.apache.hadoop.fs.Path(dumpPath)
+    val in = path.getFileSystem(conf).open(path)
+    try {
+      val r = new java.io.InputStreamReader(
+        new org.apache.commons.compress.compressors.bzip2
+          .BZip2CompressorInputStream(in, false),
+        java.nio.charset.StandardCharsets.UTF_8)
+      val sb = new java.lang.StringBuilder
+      val chunk = new Array[Char](64 * 1024)
+      var n = r.read(chunk)
+      while (n >= 0) { sb.append(chunk, 0, n); n = r.read(chunk) }
+      sb.toString
+    } finally in.close()
+  }
+
   /** A2-multistream: the `<siteinfo>` namespace map from the HEADER
-    * stream only — byte range [0, first index offset), one tiny
-    * decode, never the whole dump (the XML source on a multistream
-    * file would decode every stream just to find the header's
-    * namespace tags). Output matches [[MediaWikiXml.readNamespaces]]
-    * column-for-column. */
+    * stream only — bz2 stream 0, one tiny driver-side decode that reads
+    * neither the index nor the rest of the dump (the XML source on a
+    * multistream file would decode every stream just to find the
+    * header's namespace tags). Building the frame submits no Spark job.
+    * `indexPath` is unused: the header's extent is fixed by the bz2
+    * format, not by the index; the parameter keeps the signature
+    * parallel to [[readPages]]. Output matches
+    * [[MediaWikiXml.readNamespaces]] column-for-column. */
   def readNamespaces(spark: SparkSession, dumpPath: String,
       indexPath: String): DataFrame = {
     import spark.implicits._
-    // header bound = the SMALLEST index offset — a 1-row aggregate,
-    // never the full offset list (r16: the old head-of-collected-list
-    // materialized every range to read one number)
-    val firstRow = readIndex(spark, indexPath)
-      .agg(min(col("stream_offset"))).collect()(0)
-    require(!firstRow.isNullAt(0), s"empty multistream index: $indexPath")
-    val firstOffset = firstRow.getLong(0)
-    val header = decodeRange(spark.sparkContext.hadoopConfiguration,
-      dumpPath, 0L, firstOffset)
+    val header = readHeaderStream(spark.sparkContext.hadoopConfiguration, dumpPath)
     // namespace elements are self-closing or text-bearing
     val elems = "<namespace\\b[^>]*(?:/>|>[^<]*</namespace>)".r
       .findAllIn(header).toSeq

@@ -1,5 +1,7 @@
 package graft.ingest
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.DataFrame
 
 /** Load-side of the reference's ETL (SURVEY.md §2.A11–A12).
@@ -135,8 +137,8 @@ object Sinks {
             del.close(); ins.close()
             done = true
           } catch {
-            case e: Throwable =>
-              try conn.rollback() catch { case _: Throwable => () }
+            case NonFatal(e) =>
+              try conn.rollback() catch { case NonFatal(_) => () }
               // 40001 = serialization failure (deadlock victim): the
               // txn rolled back cleanly, replaying it is safe and
               // idempotent — retry with backoff, rethrow anything else

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -73,6 +76,27 @@ class CorpusExportSpec extends AnyFunSuite with LocalSparkSuite {
     assert(written.except(reman).count() === 0 && reman.except(written).count() === 0)
   }
 
+  test("exportJsonl evaluates its shard plan once and returns the shipped manifest") {
+    val seen = spark.sparkContext.longAccumulator("export-input-rows")
+    // nondeterministic, so the optimizer may neither fold nor duplicate
+    // it away: the accumulator counts real evaluations of the input
+    val passThrough = udf { (id: Long) => seen.add(1L); id }.asNondeterministic()
+    val input = docs.withColumn("doc_id", passThrough(col("doc_id")))
+    // the reference: one full evaluation of the shard plan. assignShards
+    // reads its input twice by design (the per-bucket offsets and the
+    // rows), so that is 2 x docs; the export must add no pass of its own
+    CorpusExport.assignShards(input, target).write.format("noop").mode("overwrite").save()
+    val onePlan = seen.value
+    assert(onePlan === 2 * docs.count())
+    seen.reset()
+    val dir = Files.createTempDirectory("graftonce").toString
+    val written = CorpusExport.exportJsonl(input, dir, target)
+    assert(seen.value === onePlan)
+    val expected = CorpusExport.manifest(sharded).collect().toSeq
+    assert(written.collect().toSeq === expected)
+    assert(spark.read.parquet(s"$dir/_manifest").collect().toSeq === expected)
+  }
+
   test("shipped manifest verifies against the files on disk; corruption is caught") {
     val dir = java.nio.file.Files.createTempDirectory("graftman").toString
     CorpusExport.exportJsonl(docs, dir, target)
@@ -99,6 +123,57 @@ class CorpusExportSpec extends AnyFunSuite with LocalSparkSuite {
     val bad = CorpusExport.verifyExport(spark, dir2)
     assert(bad.count() === 2) // the shard's shipped row + its on-disk row
     assert(bad.select("side").distinct().count() === 2)
+  }
+
+  /** Export to a fresh directory, let `damage` edit the tree, then verify
+    * it under a new path, as the truncation test above does. */
+  private def verifyDamaged(prefix: String)(damage: java.io.File => Unit): DataFrame = {
+    val dir = Files.createTempDirectory(prefix).toString
+    CorpusExport.exportJsonl(docs, dir, target)
+    damage(new java.io.File(dir))
+    val recv = dir + "_recv"
+    Files.move(Paths.get(dir), Paths.get(recv))
+    CorpusExport.verifyExport(spark, recv)
+  }
+
+  private def shardDirs(root: java.io.File): Seq[java.io.File] =
+    root.listFiles().filter(d => d.isDirectory && d.getName.startsWith("lang="))
+      .flatMap(_.listFiles().filter(_.isDirectory)).sortBy(_.getPath).toSeq
+
+  private def sides(bad: DataFrame): Seq[String] =
+    bad.select("side").collect().map(_.getString(0)).toSeq
+
+  test("verifyExport: a deleted shard directory is one shipped row") {
+    val bad = verifyDamaged("graftdel") { root =>
+      val victim = shardDirs(root).head
+      victim.listFiles().foreach(_.delete())
+      assert(victim.delete())
+    }
+    assert(sides(bad) === Seq("shipped"))
+  }
+
+  test("verifyExport: a copied extra shard directory is one on_disk row") {
+    val bad = verifyDamaged("graftcopy") { root =>
+      val src = shardDirs(root).head
+      val dst = new java.io.File(src.getParentFile, "shard=9999")
+      assert(dst.mkdir())
+      src.listFiles().foreach(f => Files.copy(f.toPath, dst.toPath.resolve(f.getName)))
+    }
+    assert(sides(bad) === Seq("on_disk"))
+    assert(bad.select("shard").collect().map(_.getInt(0)).toSeq === Seq(9999))
+  }
+
+  test("verifyExport: multiset diff counts every extra shipped copy") {
+    // three copies of the shipped manifest: each shard's row is shipped
+    // three times and found on disk once, so it shows up twice
+    val nShards = CorpusExport.manifest(sharded).count()
+    val bad = verifyDamaged("graftdup") { root =>
+      val man = new java.io.File(root, "_manifest")
+      val part = man.listFiles().filter(_.getName.endsWith(".parquet")).head
+      for (i <- 1 to 2)
+        Files.copy(part.toPath, man.toPath.resolve(s"copy$i-${part.getName}"))
+    }
+    assert(sides(bad) === Seq.fill(2 * nShards.toInt)("shipped"))
   }
 
   test("gzip-compressed export round-trips identically") {

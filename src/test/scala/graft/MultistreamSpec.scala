@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path}
 
 import org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -49,6 +50,31 @@ class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
     val index = dir.resolve("multi-index.txt")
     Files.writeString(index, indexLines.mkString("\n") + "\n")
     (dump.toString, index.toString)
+  }
+
+  /** The Spark jobs `f` submits. The listener bus is asynchronous but
+    * ordered, so once a marked fence job submitted after `f` has ended,
+    * every job start before it has been counted. */
+  private def jobsSubmittedBy[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val fenceDone = new java.util.concurrent.CountDownLatch(1)
+    @volatile var fenceId = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.fence") != null)) fenceId = e.jobId
+        else started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == fenceId) fenceDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      sc.setLocalProperty("graft.fence", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.fence", null)
+      assert(fenceDone.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never ended")
+      (a, started.get)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("index parses offset:page_id:title, title colons intact") {
@@ -101,9 +127,13 @@ class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("header-only namespace read == XML-source namespaces") {
     val dir = Files.createTempDirectory("msns")
-    val (dump, index) = writeFixture(dir, 3)
-    val fromHeader = Multistream.readNamespaces(spark, dump, index)
-      .orderBy(col("ns_key")).collect().toSeq
+    val (dump, _) = writeFixture(dir, 3)
+    // the header is bz2 stream 0 by format: neither the index nor a
+    // Spark job is needed to find it
+    val missing = dir.resolve("no-such-index.txt").toString
+    val (ns, jobs) = jobsSubmittedBy(Multistream.readNamespaces(spark, dump, missing))
+    assert(jobs === 0)
+    val fromHeader = ns.orderBy(col("ns_key")).collect().toSeq
     val fromXml = MediaWikiXml.readNamespaces(
       spark, "src/test/resources/minidump.xml")
       .orderBy(col("ns_key")).collect().toSeq

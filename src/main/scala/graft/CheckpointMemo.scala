@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Session-scoped memo for eagerly-materialized (localCheckpoint'd)
@@ -70,7 +72,7 @@ private[graft] object CheckpointMemo {
             addTagNanos(tag, nanos)
             built
           case Some(winner) =>
-            try built.unpersist() catch { case _: Throwable => () }
+            try built.unpersist() catch { case NonFatal(_) => () }
             winner
         }
     }
@@ -113,11 +115,11 @@ private[graft] object CheckpointMemo {
     * run every registered non-frame release hook). */
   def clear(): Unit = {
     memo.values.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
+      try df.unpersist() catch { case NonFatal(_) => () }
     }
     memo.clear()
     clearHooks.values.foreach { f =>
-      try f() catch { case _: Throwable => () }
+      try f() catch { case NonFatal(_) => () }
     }
   }
 }

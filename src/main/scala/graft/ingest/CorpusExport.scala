@@ -19,8 +19,8 @@ import org.apache.spark.sql.types._
   * DISTRIBUTED byte prefix sum — the same bucketed shape as
   * [[graft.ops.CurationOps.sourceMixing]]: docs are bucketed by
   * `pmod(doc_id, buckets)`, per-(lang, bucket) byte totals roll up
-  * into broadcastable cross-bucket offsets (langs × buckets rows at
-  * any corpus size), and the in-bucket cumsum window partitions by
+  * into cross-bucket offsets collected to the driver (langs × buckets
+  * rows at any corpus size), and the in-bucket cumsum window partitions by
   * (lang, bucket) — no single task ever windows a whole language,
   * and the canonical order (lang, bucket, doc_id) is stable under
   * any partitioning. A doc's shard is `start div targetBytes`, so
@@ -34,22 +34,50 @@ object CorpusExport {
     * it tunes `targetBytes` rather than the split points). */
   private def docBytes: Column = octet_length(col("text")) + lit(1L)
 
+  /** A doc's term of its shard's content fingerprint. */
+  private def docFp: Column =
+    xxhash64(col("doc_id"), col("text")).cast("decimal(38,0)")
+
   /** Deterministic size-bounded shard assignment. Returns the input
-    * plus a `shard` column (0-based per lang). */
+    * plus a `shard` column (0-based per lang). Docs with a null `lang`
+    * or `doc_id` get no shard and are dropped. Runs one Spark job when
+    * called: the per-bucket byte totals are collected to the driver. */
   def assignShards(docs: DataFrame, targetBytes: Long, buckets: Int = 64): DataFrame = {
     require(targetBytes > 0, "targetBytes must be positive")
+    require(buckets > 0, "buckets must be positive")
     val sized = docs.withColumn("bucket", pmod(col("doc_id"), lit(buckets)))
       .withColumn("bytes", docBytes)
-    // cross-bucket offsets: langs × buckets rows — broadcastable at
-    // any corpus size (the table's width is config, not data)
-    val offsets = sized.groupBy(col("lang"), col("bucket"))
-      .agg(sum(col("bytes")).as("bb"))
-      .withColumn("off", coalesce(
-        sum(col("bb")).over(Window.partitionBy(col("lang")).orderBy(col("bucket"))
-          .rowsBetween(Window.unboundedPreceding, -1)), lit(0L)))
-      .drop("bb")
-    sized
-      .join(broadcast(offsets), Seq("lang", "bucket"))
+    val langKey = col("lang").cast("string")
+    // cross-bucket offsets: per-lang bucket byte totals, folded inside
+    // each partition and merged on the driver — one job, no shuffle,
+    // and at most langs × buckets entries per partition at any corpus
+    // size. Per lang, bucket b starts after every lower bucket's bytes;
+    // a null bucket (null doc_id) sorts first, so its bytes still count
+    // although its docs get no shard
+    val totals = sized.select(langKey, col("bucket").cast("int"), col("bytes")).rdd
+      .mapPartitions { rows =>
+        val acc = scala.collection.mutable.HashMap.empty[(String, Option[Int]), Long]
+        rows.filterNot(_.isNullAt(0)).foreach { r =>
+          val k = (r.getString(0), if (r.isNullAt(1)) None else Some(r.getInt(1)))
+          acc(k) = acc.getOrElse(k, 0L) + (if (r.isNullAt(2)) 0L else r.getLong(2))
+        }
+        acc.iterator
+      }
+      .collect().groupMapReduce(_._1)(_._2)(_ + _)
+    val offsets: Map[String, Seq[Long]] = totals.groupBy(_._1._1).map { case (lang, bs) =>
+      val off = Array.fill(buckets)(0L)
+      var run = 0L
+      bs.toSeq.sortBy(_._1._2).foreach { case ((_, b), bb) =>
+        b.foreach(off(_) = run)
+        run += bb
+      }
+      lang -> off.toSeq
+    }
+    val shardOf = sized
+      // a lang or bucket the table cannot resolve (null) has no offset
+      .withColumn("off", element_at(element_at(typedLit(offsets), langKey),
+        (col("bucket") + 1).cast("int")))
+      .filter(col("off").isNotNull)
       .withColumn("start", col("off") + coalesce(
         sum(col("bytes")).over(Window.partitionBy(col("lang"), col("bucket"))
           .orderBy(col("doc_id"))
@@ -58,6 +86,8 @@ object CorpusExport {
       // floor exactly, no boundary doc can flip on a rounding tie
       .withColumn("shard", expr(s"cast(start div ${targetBytes}L as int)"))
       .drop("bucket", "bytes", "off", "start")
+    // output columns: lang, then the input's other columns, then shard
+    shardOf.select(col("lang") +: shardOf.columns.filter(_ != "lang").map(col): _*)
   }
 
   /** Write `docs` as `lang=<l>/shard=<k>/` JSONL files. One file per
@@ -74,10 +104,12 @@ object CorpusExport {
     // the shard plan runs ONCE: the JSONL write and the manifest both
     // read this materialized frame. localCheckpoint, not persist(): a
     // cached plan loses AQE's partition coalescing, so the write would
-    // run one task per session shuffle partition
+    // run one task per session shuffle partition. Lazy: the plan's
+    // exchanges run here, and its last stage runs inside the write job,
+    // which stores the blocks the manifest then reads
     val planned = assignShards(docs, targetBytes)
       .repartition(col("lang"), col("shard"))
-      .localCheckpoint()
+      .localCheckpoint(eager = false)
     try {
       planned.write.partitionBy("lang", "shard")
         .option("compression", codec)
@@ -91,8 +123,21 @@ object CorpusExport {
         .sortWithinPartitions(col("lang"), col("shard"))
         .write.mode("overwrite").parquet(s"$path/_manifest")
     } finally releaseCheckpoint(planned)
-    docs.sparkSession.read.parquet(s"$path/_manifest")
+    readManifest(docs.sparkSession, path)
   }
+
+  /** The `_manifest` columns as parquet returns them (all nullable). */
+  private val manifestSchema: StructType = StructType(Seq(
+    StructField("lang", StringType),
+    StructField("shard", IntegerType),
+    StructField("n_docs", LongType),
+    StructField("n_bytes", LongType),
+    StructField("content_fp", DecimalType(38, 0))))
+
+  /** The shipped manifest, read with its declared schema: no job to
+    * infer it from a parquet footer. */
+  private def readManifest(s: SparkSession, path: String): DataFrame =
+    s.read.schema(manifestSchema).parquet(s"$path/_manifest")
 
   /** Drop a localCheckpoint's blocks now rather than at the
     * ContextCleaner's next GC-driven sweep. */
@@ -110,25 +155,46 @@ object CorpusExport {
     * the content fingerprint is an exact integer sum).
     *
     * The diff is a multiset difference both ways (`exceptAll`
-    * semantics) in ONE aggregate over one scan: shipped rows weigh +1,
-    * recomputed rows -1, and a manifest row whose weights do not
-    * cancel comes back |weight| times, tagged `shipped` (surplus in
-    * the shipped manifest) or `on_disk` (surplus on disk). */
+    * semantics) through ONE aggregate at (lang, shard) grain over the
+    * doc rows on disk and the shipped manifest rows together: per
+    * shard, the disk totals and the list of shipped rows. A shipped
+    * row equal to the disk totals cancels once; every other shipped
+    * row comes back tagged `shipped`, and disk totals no shipped row
+    * cancelled come back tagged `on_disk`. */
   def verifyExport(s: SparkSession, path: String): DataFrame = {
     // an integrity checker must see the directory as it IS, not as the
     // session's file-status cache remembers it
     s.catalog.refreshByPath(path)
-    val shipped = s.read.parquet(s"$path/_manifest")
-    val recomputed = shardTotals(importJsonl(s, path)
-      .withColumn("lang", col("lang").cast("string")))
-    val keys = shipped.columns.toSeq.map(col)
-    shipped.withColumn("w", lit(1L))
-      .unionByName(recomputed.withColumn("w", lit(-1L)))
-      .groupBy(keys: _*).agg(sum(col("w")).as("w"))
-      .filter(col("w") =!= 0)
-      .select(keys :+ explode(array_repeat(
-        when(col("w") > 0, lit("shipped")).otherwise(lit("on_disk")),
-        abs(col("w")).cast("int"))).as("side"): _*)
+    // a manifest row as one struct: the shipped columns before the
+    // aggregate, the disk totals (same names) after it
+    val row = struct(col("n_docs"), col("n_bytes"), col("content_fp"))
+    val shipped = readManifest(s, path)
+      .select(col("lang"), col("shard"), row.as("row"), lit(null: String).as("text"),
+        lit(null: java.lang.Long).as("doc_id"), lit(null: Integer).as("on_disk"))
+    val onDisk = importJsonl(s, path)
+      .select(col("lang").cast("string").as("lang"), col("shard"),
+        lit(null).cast(shipped.schema("row").dataType).as("row"),
+        col("text"), col("doc_id"), lit(1).as("on_disk"))
+    val isDisk = col("on_disk").isNotNull
+    val perShard = shipped.unionByName(onDisk)
+      .groupBy(col("lang"), col("shard"))
+      .agg(
+        count(col("on_disk")).as("n_docs"),
+        sum(when(isDisk, docBytes)).as("n_bytes"),
+        sum(when(isDisk, docFp)).as("content_fp"),
+        collect_list(col("row")).as("shipped"))
+    // the disk totals cancel the first shipped row equal to them
+    val hasDisk = col("n_docs") > 0
+    val hit = array_position(col("shipped"), row)
+    val shippedLeft = filter(col("shipped"), (_, i) => !(hasDisk && i === hit - 1))
+    val diskLeft = filter(array(row), _ => hasDisk && hit === 0)
+    def tagged(rows: Column, side: String): Column =
+      transform(rows, r => r.withField("side", lit(side)))
+    perShard
+      .select(col("lang"), col("shard"),
+        explode(concat(tagged(shippedLeft, "shipped"), tagged(diskLeft, "on_disk"))).as("d"))
+      .select(col("lang"), col("shard"), col("d.n_docs"), col("d.n_bytes"),
+        col("d.content_fp"), col("d.side"))
   }
 
   /** Per-shard accounting a loader can verify against: doc count,
@@ -144,8 +210,7 @@ object CorpusExport {
       .agg(
         count(lit(1)).as("n_docs"),
         sum(docBytes).as("n_bytes"),
-        sum(xxhash64(col("doc_id"), col("text")).cast("decimal(38,0)"))
-          .as("content_fp"))
+        sum(docFp).as("content_fp"))
 
   /** The parquet-side schema of the exported payload columns (the
     * partition columns `lang`/`shard` come back from the directory

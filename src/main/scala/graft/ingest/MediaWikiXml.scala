@@ -90,7 +90,14 @@ object MediaWikiXml {
       .load(path))
 
   /** A3–A8: normalize pages to revision grain with all union/presence
-    * decodes applied — the golden flattened schema of FIXTURES.md §2. */
+    * decodes applied — the golden flattened schema of FIXTURES.md §2.
+    *
+    * `posexplode_outer` + a filter on the generated position gives
+    * exactly `explode`'s rows (a page without revisions yields none, a
+    * null element still yields its row), but unlike `explode` it lets
+    * the optimizer infer no `size(revision) > 0` filter: pushed under a
+    * `from_xml` projection, that filter would parse every page three
+    * times. */
   def flattenRevisions(pages: DataFrame): DataFrame =
     pages.select(
       col("id").as("page_id"),
@@ -99,7 +106,8 @@ object MediaWikiXml {
       col("redirect").isNotNull.as("is_redirect"),
       col("redirect._title").as("redirect_title"),
       col("restrictions"),
-      explode(col("revision")).as("rev"))
+      posexplode_outer(col("revision")).as(Seq("rev_pos", "rev")))
+      .filter(col("rev_pos").isNotNull)
       .select(
         col("page_id"), col("ns"), col("title"), col("is_redirect"),
         col("redirect_title"), col("restrictions"),

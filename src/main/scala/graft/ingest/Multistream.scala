@@ -1,6 +1,7 @@
 package graft.ingest
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Splittable ingest of `pages-articles-multistream.xml.bz2` dumps
@@ -16,10 +17,12 @@ import org.apache.spark.sql.functions._
   *    `offset:page_id:title` line per page, `offset` = the byte offset
   *    of the bz2 stream containing that page.
   *
-  * The reader turns the index's distinct offsets into (start, end)
-  * byte ranges — one range per 100-page stream — and decodes ranges in
+  * The reader decodes ONE bz2 stream per distinct index offset, in
   * parallel: N streams = N independent tasks, so a 20 GB dump ingests
-  * at cluster width instead of one task. Per-stream decode is genuine
+  * at cluster width instead of one task. Each task seeks to its offset
+  * and decodes with `decompressConcatenated = false`, so the decoder
+  * stops at that stream's own end-of-stream marker: no byte ranges,
+  * no end offsets, no neighbour's bytes. Per-stream decode is genuine
   * per-partition imperative work (the documented mapPartitions
   * exception); everything after — schema application, flatten,
   * classify — is the same declarative chain as [[MediaWikiXml]], via
@@ -28,17 +31,19 @@ import org.apache.spark.sql.functions._
   * single-stream `spark.read.format("xml")` path (IngestSpec proves
   * frame equality on a 3-stream fixture).
   *
-  * 100 TB notes: the index is ~1% of the dump and is read once; the
-  * range list is built DISTRIBUTIVELY and stays a Dataset end to end
-  * (r16 — a full-history enwiki index is ~10M distinct offsets, too
-  * many to collect): the only driver materialization on the ingest
-  * path is one boundary row per partition. Each decode task opens the
-  * dump file at its own offset (HDFS/S3 positioned read) and never
-  * touches another task's range, so ingest scales with stream count. The trailing data range deliberately runs to EOF and decodes
-  * the concatenated footer stream too (`</mediawiki>` carries no
-  * `<page>`, so it contributes nothing).
+  * 100 TB notes: the index is ~1% of the dump and is read once; its
+  * distinct offsets stay distributed end to end (a full-history enwiki
+  * index is ~10M distinct offsets, too many to collect), and building
+  * the page frame submits no Spark job. Each decode task opens the
+  * dump at its own offset (HDFS/S3 positioned read) and reads only its
+  * own stream, so ingest scales with stream count. The header (stream
+  * 0) and the footer stream (`</mediawiki>`) are never listed in the
+  * index, so no page task decodes them.
   */
 object Multistream {
+
+  /** An index line's leading `offset:page_id:` fields. */
+  private val IndexFields = "^(\\d+):(\\d+):"
 
   /** Parse the multistream index into (stream_offset, page_id, title).
     * Reads via the text source, so a `.bz2` index decodes transparently
@@ -48,10 +53,9 @@ object Multistream {
     spark.read.textFile(indexPath)
       .toDF("line")
       .filter(length(trim(col("line"))) > 0)
-      // a corrupt line would regexp_extract to '' → cast to null →
-      // NPE deep in streamRanges' collect; drop it here instead so a
-      // single bad index line can't abort the whole ingest opaquely
-      .filter(col("line").rlike("^\\d+:\\d+:"))
+      // a corrupt line would regexp_extract to '' → cast to a null
+      // offset and page id; drop it instead
+      .filter(col("line").rlike(IndexFields))
       .select(
         regexp_extract(col("line"), "^(\\d+):(\\d+):(.*)$", 1)
           .cast("long").as("stream_offset"),
@@ -59,113 +63,69 @@ object Multistream {
           .cast("long").as("page_id"),
         regexp_extract(col("line"), "^(\\d+):(\\d+):(.*)$", 3).as("title"))
 
-  private def dumpLen(spark: SparkSession, dumpPath: String): Long = {
-    val fs = new org.apache.hadoop.fs.Path(dumpPath)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    fs.getFileStatus(new org.apache.hadoop.fs.Path(dumpPath)).getLen
+  /** The distinct stream offsets the index lists — one element per bz2
+    * data stream — dealt round-robin over `slices` partitions. Lines
+    * without [[readIndex]]'s leading fields are skipped, as it skips
+    * them, so a single bad index line can't abort the whole ingest.
+    * RDD operations, not a Dataset: the two shuffles (the distinct and
+    * the deal) run as stages of whichever job consumes the offsets,
+    * with no job of their own and no generated code for a list of
+    * longs. A full-history enwiki index lists ~10M distinct offsets,
+    * so nothing is collected. */
+  private[graft] def streamOffsetsRDD(spark: SparkSession, indexPath: String,
+      slices: Int): RDD[Long] = {
+    val fields = IndexFields.r
+    // minPartitions 1: a small index stays one partition through the
+    // distinct, so the deal gives each of its offsets its own slice
+    spark.sparkContext.textFile(indexPath, 1)
+      .flatMap(l => fields.findFirstMatchIn(l).flatMap(_.group(1).toLongOption))
+      .distinct().repartition(slices)
   }
 
-  /** The distinct stream byte ranges [start, end) the index implies,
-    * built DISTRIBUTIVELY (VERDICT_r15 #6 — the old driver-side
-    * `.collect()` of every distinct offset was ~N/100 rows, i.e. ~10M
-    * offsets for a full-history enwiki dump): each range's end is its
-    * offset's successor, so the offsets range-partition by value, each
-    * partition pairs its own sorted run with one element of lookahead
-    * (the documented per-partition imperative exception), and the only
-    * driver materialization is ONE first-offset row per partition
-    * (bounded by the partition count, never the index size) to stitch
-    * the partition boundaries. The last data stream runs to file
-    * length — decoding the concatenated footer with it is harmless (no
-    * `<page>` inside). */
-  def streamRangesDS(spark: SparkSession, dumpPath: String,
-      indexPath: String): Dataset[(Long, Long)] = {
-    import spark.implicits._
-    val fileLen = dumpLen(spark, dumpPath)
-    val parts = math.max(1, spark.sparkContext.defaultParallelism)
-    val sorted = readIndex(spark, indexPath)
-      .select(col("stream_offset")).distinct().as[Long]
-      .repartitionByRange(parts, col("stream_offset"))
-      .sortWithinPartitions(col("stream_offset"))
-    val rdd = sorted.rdd
-    // one row per non-empty partition: (partition index, its first
-    // offset) — the bounded boundary exchange
-    val firsts: Map[Int, Long] = rdd
-      .mapPartitionsWithIndex((i, it) =>
-        if (it.hasNext) Iterator.single((i, it.next())) else Iterator.empty)
-      .collect().toMap
-    val ranges = rdd.mapPartitionsWithIndex { (i, it) =>
-      // the offset AFTER this partition's last = the first offset of
-      // the next non-empty partition (range partitioning orders
-      // partitions by value), or EOF for the global last
-      val boundary = firsts.keys.filter(_ > i).toSeq.sorted.headOption
-        .map(firsts).getOrElse(fileLen)
-      new Iterator[(Long, Long)] {
-        private var cur: Option[Long] =
-          if (it.hasNext) Some(it.next()) else None
-        def hasNext: Boolean = cur.isDefined
-        def next(): (Long, Long) = {
-          val s = cur.get
-          val e =
-            if (it.hasNext) { val n = it.next(); cur = Some(n); n }
-            else { cur = None; boundary }
-          (s, e)
-        }
-      }
-    }
-    spark.createDataset(ranges)
-  }
+  /** Driver-side convenience over [[streamOffsetsRDD]] — FIXTURE-SCALE
+    * use (specs): collects the sorted distinct offsets. The ingest
+    * path itself never materializes them ([[readPages]] maps over the
+    * RDD). */
+  private[graft] def streamOffsets(spark: SparkSession, indexPath: String): Seq[Long] =
+    streamOffsetsRDD(spark, indexPath, 1).collect().sorted.toSeq
 
-  /** Driver-side convenience over [[streamRangesDS]] — FIXTURE-SCALE
-    * use (specs): collects the full range list. The
-    * ingest path itself never materializes it ([[readPages]] maps over
-    * the Dataset). */
-  def streamRanges(spark: SparkSession, dumpPath: String,
-      indexPath: String): Seq[(Long, Long)] =
-    streamRangesDS(spark, dumpPath, indexPath)
-      .collect().sortBy(_._1).toSeq
-
-  /** Open one bz2 stream range as a decoding Reader — nothing is
-    * buffered beyond the decompressor's block: the compressed bytes
-    * stream straight off the positioned FS read (bounded to the
-    * range), and concatenated streams inside the range (the
-    * EOF-trailing footer) decode too via the
-    * `decompressConcatenated` flag. Takes the job's Hadoop conf
-    * explicitly so executor-side opens see the driver's filesystem
-    * settings (S3/ABFS credentials, fs.defaultFS) instead of an
-    * empty `new Configuration()`. */
-  private def openRange(conf: org.apache.hadoop.conf.Configuration,
-      dumpPath: String, start: Long, end: Long): java.io.Reader = {
+  /** Open the ONE bz2 stream that starts at `offset` as a decoding
+    * Reader. `decompressConcatenated = false` stops the decoder at
+    * that stream's end-of-stream marker, so a task never decodes a
+    * neighbour's stream (nor the footer) and needs no end offset.
+    * Nothing is buffered beyond the decompressor's block: the
+    * compressed bytes stream straight off the positioned FS read.
+    * Takes the job's Hadoop conf explicitly so executor-side opens see
+    * the driver's filesystem settings (S3/ABFS credentials,
+    * fs.defaultFS) instead of an empty `new Configuration()`. */
+  private def openStream(conf: org.apache.hadoop.conf.Configuration,
+      dumpPath: String, offset: Long): java.io.Reader = {
     val path = new org.apache.hadoop.fs.Path(dumpPath)
-    val fs = path.getFileSystem(conf)
-    val in = fs.open(path)
-    in.seek(start)
-    val bounded = new java.io.FilterInputStream(in) {
-      private var left = end - start
-      override def read(): Int =
-        if (left <= 0) -1
-        else { val b = super.read(); if (b >= 0) left -= 1; b }
-      override def read(buf: Array[Byte], off: Int, len: Int): Int = {
-        if (left <= 0) return -1
-        val n = super.read(buf, off, math.min(len.toLong, left).toInt)
-        if (n > 0) left -= n
-        n
-      }
-    }
-    val bz = new org.apache.commons.compress.compressors.bzip2
-      .BZip2CompressorInputStream(bounded, true)
-    new java.io.InputStreamReader(bz, java.nio.charset.StandardCharsets.UTF_8)
+    val in = path.getFileSystem(conf).open(path)
+    // the decoder reads the stream header on construction: a bad offset
+    // fails here, and the file must not stay open behind it
+    var ok = false
+    try {
+      in.seek(offset)
+      val r = new java.io.InputStreamReader(
+        new org.apache.commons.compress.compressors.bzip2
+          .BZip2CompressorInputStream(in, false),
+        java.nio.charset.StandardCharsets.UTF_8)
+      ok = true
+      r
+    } finally if (!ok) in.close()
   }
 
-  /** Bounded-memory page iterator over one bz2 stream range: decode
+  /** Bounded-memory page iterator over the bz2 stream at `offset`: decode
     * and scan in one pass, emitting each `<page>…</page>` as found and
     * compacting the scan buffer behind it. Peak allocation is one page
     * plus a 64 KiB read chunk — a pathological million-page stream
     * costs the same memory as a 100-page one (VERDICT r12 #7). Closes
     * the underlying FS stream on exhaustion or failure. */
-  private[graft] def streamPagesRange(
+  private[graft] def streamPagesAt(
       conf: org.apache.hadoop.conf.Configuration,
-      dumpPath: String, start: Long, end: Long): Iterator[String] = {
-    val reader = openRange(conf, dumpPath, start, end)
+      dumpPath: String, offset: Long): Iterator[String] = {
+    val reader = openStream(conf, dumpPath, offset)
     var closed = false
     def closeNow(): Unit = if (!closed) { closed = true; reader.close() }
     // close on any abrupt exit without catching it: a fatal error or an
@@ -245,23 +205,18 @@ object Multistream {
     }
 
   /** The header's XML: bz2 stream 0 by format, decoded on the driver
-    * with `decompressConcatenated = false`, so the decoder stops at that
-    * stream's end-of-stream marker and never reads a page stream. */
+    * by [[openStream]], which stops at that stream's end-of-stream
+    * marker and never reads a page stream. */
   private def readHeaderStream(conf: org.apache.hadoop.conf.Configuration,
       dumpPath: String): String = {
-    val path = new org.apache.hadoop.fs.Path(dumpPath)
-    val in = path.getFileSystem(conf).open(path)
+    val r = openStream(conf, dumpPath, 0L)
     try {
-      val r = new java.io.InputStreamReader(
-        new org.apache.commons.compress.compressors.bzip2
-          .BZip2CompressorInputStream(in, false),
-        java.nio.charset.StandardCharsets.UTF_8)
       val sb = new java.lang.StringBuilder
       val chunk = new Array[Char](64 * 1024)
       var n = r.read(chunk)
       while (n >= 0) { sb.append(chunk, 0, n); n = r.read(chunk) }
       sb.toString
-    } finally in.close()
+    } finally r.close()
   }
 
   /** A2-multistream: the `<siteinfo>` namespace map from the HEADER
@@ -295,29 +250,22 @@ object Multistream {
 
   /** A1-multistream: page-grain scan of a multistream dump — the
     * parallel twin of [[MediaWikiXml.readPages]], one task per bz2
-    * stream, identical output schema and rows. */
+    * stream, identical output schema and rows. Lazy: building the frame
+    * submits no Spark job. */
   def readPages(spark: SparkSession, dumpPath: String,
       indexPath: String): DataFrame = {
     import spark.implicits._
-    // ranges stay a DATASET end to end (VERDICT_r15 #6): the decode
-    // fans out from the distributed range rows — no driver
-    // materialization at any index size. Round-robin the skinny
-    // (start, end) pairs across ~4 waves per core so stream-size skew
-    // (some bz2 streams decode slower) back-fills.
+    // round-robin the distinct offsets across ~4 waves per core so
+    // stream-size skew (some bz2 streams decode slower) back-fills
     val slices = math.max(1, spark.sparkContext.defaultParallelism * 4)
-    // ship the DRIVER's Hadoop conf to the range tasks — an
+    // ship the DRIVER's Hadoop conf to the decode tasks — an
     // executor-side `new Configuration()` would drop object-store
-    // credentials/endpoints set on the session and fail after a
-    // successful driver-side range listing
+    // credentials/endpoints set on the session
     val bcConf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val confBc = spark.sparkContext.broadcast(bcConf)
-    val pageXml: Dataset[String] =
-      streamRangesDS(spark, dumpPath, indexPath)
-        .repartition(slices)
-        .flatMap { case (s, e) =>
-          streamPagesRange(confBc.value.value, dumpPath, s, e)
-        }
+    val pageXml = spark.createDataset(streamOffsetsRDD(spark, indexPath, slices)
+      .flatMap(off => streamPagesAt(confBc.value.value, dumpPath, off)))
     pageXml.toDF("xml")
       .select(from_xml(col("xml"), MediaWikiXml.pageSchema).as("p"))
       .select(col("p.*"))

@@ -60,6 +60,15 @@ class CorpusExportSpec extends AnyFunSuite with LocalSparkSuite {
     assert(diff.count() === 0)
   }
 
+  test("a null-lang doc gets no shard and moves no other doc's shard") {
+    val stray = docs.limit(1).withColumn("lang", lit(null).cast("string"))
+    val got = CorpusExport.assignShards(docs.unionByName(stray), target)
+      .select("doc_id", "lang", "shard")
+    assert(got.filter(col("lang").isNull).count() === 0)
+    val want = sharded.select("doc_id", "lang", "shard")
+    assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0)
+  }
+
   test("JSONL round-trip preserves every doc, byte for byte") {
     val dir = java.nio.file.Files.createTempDirectory("graftjsonl").toString
     val written = CorpusExport.exportJsonl(docs, dir, target)

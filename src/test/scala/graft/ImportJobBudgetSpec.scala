@@ -1,0 +1,57 @@
+package graft
+
+import java.nio.file.Files
+
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.ingest.{CorpusExport, MediaWikiXml, Multistream, Sinks}
+
+/** The import's Spark job count is part of its cost: every job is a
+  * scheduling round trip, and every query stage compiles generated code.
+  * One warm pass of the import call sequence (dump to parquet sinks,
+  * Derby, JSONL shards, then the verify) must stay within its budget, so
+  * a cut job cannot silently come back. */
+class ImportJobBudgetSpec extends AnyFunSuite with LocalSparkSuite {
+
+  /** Jobs of one warm pass on the 3-stream fixture (30 with the
+    * byte-range planner, the broadcast shard offsets and the
+    * two-aggregate verify). */
+  private val Budget = 18
+
+  /** One pass of the import call sequence; returns the verify's diff
+    * count. The parquet reads between steps are the caller's own, as in
+    * an import job. */
+  private def importOnce(dump: String, index: String, out: java.nio.file.Path,
+      url: String): Long = {
+    val ns = Multistream.readNamespaces(spark, dump, index)
+    ns.write.mode("overwrite").parquet(out.resolve("namespace").toString)
+    val pages = Multistream.readPages(spark, dump, index)
+    val classified = MediaWikiXml.verifySha1(
+      MediaWikiXml.classify(MediaWikiXml.flattenRevisions(pages), ns))
+    val revision = out.resolve("revision").toString
+    Sinks.writeParquetPartitioned(classified, revision)
+    MediaWikiXml.latestRevisionPerPage(spark.read.parquet(revision))
+      .write.mode("overwrite").parquet(out.resolve("page_latest").toString)
+    Sinks.writeJdbc(spark.read.parquet(revision)
+      .select("page_id", "ns", "title", "rev_id", "parent_id", "ts", "is_minor",
+        "is_anon", "text_bytes", "sha1"), url, "revision")
+    val docs = spark.read.parquet(out.resolve("page_latest").toString)
+      .filter(col("text").isNotNull && length(col("text")) > 0)
+      .select(col("page_id").as("doc_id"), col("text"), lit("en").as("lang"),
+        col("ns_name").as("source"), length(col("text")).cast("long").as("n_chars"))
+    val shards = out.resolve("shards").toString
+    CorpusExport.exportJsonl(docs, shards, 1L << 20, codec = "gzip")
+    CorpusExport.verifyExport(spark, shards).count()
+  }
+
+  test("a warm import pass stays within its Spark job budget") {
+    val dir = Files.createTempDirectory("jobbudget")
+    val (dump, index) = MultistreamFixture.writeFixture(dir, 3)
+    val url = s"jdbc:derby:${dir.resolve("db")};create=true"
+    assert(importOnce(dump, index, dir.resolve("cold"), url) === 0)
+    val (diffs, jobs) = jobsSubmittedBy(importOnce(dump, index, dir.resolve("warm"), url))
+    assert(diffs === 0)
+    assert(jobs <= Budget, s"a warm import pass ran $jobs Spark jobs (budget $Budget)")
+  }
+}

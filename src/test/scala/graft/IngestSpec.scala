@@ -144,6 +144,31 @@ class IngestSpec extends AnyFunSuite with LocalSparkSuite {
     ).collect().flatten.toSeq === Seq("203.0.113.5"))
   }
 
+  test("A4 flattenRevisions parses each page once, with explode's rows") {
+    import spark.implicits._
+    val xmls = Seq(
+      """<page><title>Two</title><ns>0</ns><id>1</id>
+        |<revision><id>10</id><text bytes="1">a</text></revision>
+        |<revision><id>11</id><text bytes="1">b</text></revision></page>""".stripMargin,
+      "<page><title>None</title><ns>0</ns><id>2</id></page>",
+      "<page><title>Empty</title><ns>0</ns><id>3</id><revision/></page>")
+    // the multistream reader's shape: from_xml over an RDD-backed column,
+    // which the optimizer cannot fold into a local relation
+    val parsed = spark.createDataset(spark.sparkContext.parallelize(xmls, 2)).toDF("xml")
+      .select(from_xml(col("xml"), MediaWikiXml.pageSchema).as("p")).select(col("p.*"))
+    val revs = MediaWikiXml.flattenRevisions(parsed)
+    val plan = revs.queryExecution.executedPlan.toString
+    assert("from_xml\\(".r.findAllMatchIn(plan).size === 1, plan)
+    // explode's rows: none for the page without <revision>, one for the
+    // empty <revision/>
+    val viaExplode = parsed.select(col("id").as("page_id"), explode(col("revision")).as("rev"))
+      .select(col("page_id"), col("rev.id").as("rev_id"), col("rev.text._VALUE").as("text"))
+    val key = Seq(col("page_id"), col("rev_id"))
+    assert(revs.select("page_id", "rev_id", "text").orderBy(key: _*).collect().toSeq ===
+      viaExplode.orderBy(key: _*).collect().toSeq)
+    assert(revs.select("page_id").collect().map(_.getLong(0)).sorted.toSeq === Seq(1L, 1L, 3L))
+  }
+
   test("A12 latest revision per page") {
     val latest = MediaWikiXml.latestRevisionPerPage(flat)
     assert(latest.count() === 8)

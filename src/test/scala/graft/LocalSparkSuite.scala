@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
@@ -28,4 +29,29 @@ trait LocalSparkSuite extends BeforeAndAfterAll { this: Suite =>
     .getOrCreate()
 
   val sfDir = "/root/testdata/sf0.001"
+
+  /** The Spark jobs `f` submits. The listener bus is asynchronous but
+    * ordered, so once a marked fence job submitted after `f` has ended,
+    * every job start before it has been counted. */
+  def jobsSubmittedBy[A](f: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val started = new java.util.concurrent.atomic.AtomicInteger
+    val fenceDone = new java.util.concurrent.CountDownLatch(1)
+    @volatile var fenceId = -1
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("graft.fence") != null)) fenceId = e.jobId
+        else started.incrementAndGet()
+      override def onJobEnd(e: SparkListenerJobEnd): Unit =
+        if (e.jobId == fenceId) fenceDone.countDown()
+    }
+    sc.addSparkListener(listener)
+    try {
+      val a = f
+      sc.setLocalProperty("graft.fence", "1")
+      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.fence", null)
+      assert(fenceDone.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never ended")
+      (a, started.get)
+    } finally sc.removeSparkListener(listener)
+  }
 }

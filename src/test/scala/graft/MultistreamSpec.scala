@@ -1,9 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path}
+import java.nio.file.Files
 
-import org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -11,71 +9,11 @@ import graft.ingest.{MediaWikiXml, Multistream}
 
 /** Splittable multistream-bz2 ingest (VERDICT_r11 #3): a 3-stream
   * fixture built from the minidump proves the N-way parallel
-  * byte-range path produces the IDENTICAL flattened frame as the
-  * single-stream XML-source path. */
+  * one-stream-per-offset path produces the IDENTICAL flattened frame as
+  * the single-stream XML-source path. */
 class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
 
-  private val dumpXml =
-    Files.readString(java.nio.file.Paths.get("src/test/resources/minidump.xml"))
-
-  private def bz2(s: String): Array[Byte] = {
-    val bos = new java.io.ByteArrayOutputStream()
-    val out = new BZip2CompressorOutputStream(bos)
-    out.write(s.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-    bos.toByteArray
-  }
-
-  /** Build the public multistream layout from the minidump: stream 0 =
-    * header+siteinfo, then `perStream`-page streams, then the footer
-    * stream; plus the offset:page_id:title index. Returns (dump,
-    * index) paths. */
-  private def writeFixture(dir: Path, perStream: Int): (String, String) = {
-    val pages = Multistream.splitPages(dumpXml).toSeq
-    val header = dumpXml.substring(0, dumpXml.indexOf("<page"))
-    val groups = pages.grouped(perStream).toSeq
-    val streams = (header +: groups.map(_.mkString("\n"))) :+ "</mediawiki>"
-    val blobs = streams.map(bz2)
-    val dump = dir.resolve("multi.xml.bz2")
-    Files.write(dump, blobs.flatten.toArray)
-    // byte offset of each DATA stream (skip header, skip footer)
-    val offsets = blobs.map(_.length.toLong).scanLeft(0L)(_ + _)
-    val indexLines = groups.zipWithIndex.flatMap { case (g, i) =>
-      g.map { p =>
-        val id = "<id>(\\d+)</id>".r.findFirstMatchIn(p).get.group(1)
-        val title = "<title>([^<]*)</title>".r.findFirstMatchIn(p).get.group(1)
-        s"${offsets(i + 1)}:$id:$title"
-      }
-    }
-    val index = dir.resolve("multi-index.txt")
-    Files.writeString(index, indexLines.mkString("\n") + "\n")
-    (dump.toString, index.toString)
-  }
-
-  /** The Spark jobs `f` submits. The listener bus is asynchronous but
-    * ordered, so once a marked fence job submitted after `f` has ended,
-    * every job start before it has been counted. */
-  private def jobsSubmittedBy[A](f: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val started = new java.util.concurrent.atomic.AtomicInteger
-    val fenceDone = new java.util.concurrent.CountDownLatch(1)
-    @volatile var fenceId = -1
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.fence") != null)) fenceId = e.jobId
-        else started.incrementAndGet()
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == fenceId) fenceDone.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      val a = f
-      sc.setLocalProperty("graft.fence", "1")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.fence", null)
-      assert(fenceDone.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never ended")
-      (a, started.get)
-    } finally sc.removeSparkListener(listener)
-  }
+  import MultistreamFixture.{pages, writeFixture}
 
   test("index parses offset:page_id:title, title colons intact") {
     val dir = Files.createTempDirectory("msidx")
@@ -88,14 +26,39 @@ class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
         (9999L, 7L, "A:B:C")))
   }
 
-  test("stream ranges: consecutive distinct offsets, last runs to EOF") {
-    val dir = Files.createTempDirectory("msrange")
+  test("each index offset decodes exactly its own stream and stops at its end") {
+    val dir = Files.createTempDirectory("msstream")
     val (dump, index) = writeFixture(dir, 3)
-    val ranges = Multistream.streamRanges(spark, dump, index)
-    assert(ranges.size === 3) // 8 pages / 3 per stream
-    // contiguous, ascending, last end = file length
-    assert(ranges.sliding(2).forall { case Seq(a, b) => a._2 == b._1 })
-    assert(ranges.last._2 === Files.size(java.nio.file.Paths.get(dump)))
+    val offsets = Multistream.streamOffsets(spark, index)
+    val conf = spark.sparkContext.hadoopConfiguration
+    // 8 pages / 3 per stream: the decoder at each offset yields that
+    // stream's pages and none of the next stream's
+    assert(offsets.map(o => Multistream.streamPagesAt(conf, dump, o).toSeq) ===
+      pages.grouped(3).toSeq)
+  }
+
+  test("an offset listed 100 times decodes its stream once") {
+    val dir = Files.createTempDirectory("msdup")
+    val (dump, index) = writeFixture(dir, 3)
+    val first = Files.readAllLines(java.nio.file.Paths.get(index)).get(0)
+    val dupIndex = dir.resolve("dup-index.txt")
+    Files.writeString(dupIndex, Seq.fill(100)(first).mkString("", "\n", "\n"))
+    val ids = Multistream.readPages(spark, dump, dupIndex.toString)
+      .select(col("id")).collect().map(_.getLong(0)).toSeq
+    val expected = pages.take(3).map("<id>(\\d+)</id>".r.findFirstMatchIn(_).get.group(1).toLong)
+    assert(ids.sorted === expected.sorted)
+  }
+
+  test("the footer stream is never needed") {
+    // not bz2 at all: a reader that decoded past the last page stream
+    // would fail on it
+    val dir = Files.createTempDirectory("msfoot")
+    val (dump, index) = writeFixture(dir, 3,
+      footer = "not a bz2 stream".getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    val (clean, cleanIndex) = writeFixture(Files.createTempDirectory("msfootok"), 3)
+    val key = MediaWikiXml.pageSchema.fieldNames.map(col).toIndexedSeq
+    assert(Multistream.readPages(spark, dump, index).orderBy(key: _*).collect().toSeq ===
+      Multistream.readPages(spark, clean, cleanIndex).orderBy(key: _*).collect().toSeq)
   }
 
   test("3-stream parallel read == single-stream read, frame-identical") {
@@ -119,8 +82,10 @@ class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
   test("stream count drives parallelism: one task per stream") {
     val dir = Files.createTempDirectory("mspar")
     val (dump, index) = writeFixture(dir, 2) // 4 data streams
-    assert(Multistream.streamRanges(spark, dump, index).size === 4)
-    import spark.implicits._
+    assert(Multistream.streamOffsets(spark, index).size === 4)
+    // the deal spreads the 4 distinct offsets over 4 decode tasks
+    val perTask = Multistream.streamOffsetsRDD(spark, index, 16).glom().collect()
+    assert(perTask.map(_.length).sorted.reverse.take(5).toSeq === Seq(1, 1, 1, 1, 0))
     val pageXml = Multistream.readPages(spark, dump, index)
     assert(pageXml.count() === 8)
   }

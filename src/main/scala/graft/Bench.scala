@@ -1,5 +1,7 @@
 package graft
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Driver-run benchmark: times every declared query at
@@ -97,16 +99,16 @@ object Bench {
       "q58_repetition_filter", "q40_langid", "q50_cosine_adjacent")
       .foreach { q =>
         try SparkEntry.queries(q)(spark, warmupDir).count()
-        catch { case _: Throwable => () }
+        catch { case NonFatal(_) => () }
       }
     // materialize the session table cache outside the timed section
     // (same role as the JIT warmup) so no single query absorbs a
     // cache build that every later query benefits from
     if (Tables.cacheForSession) {
       Tables.baseNames.foreach { t =>
-        try Tables.table(spark, sfDir, t).count() catch { case _: Throwable => () }
+        try Tables.table(spark, sfDir, t).count() catch { case NonFatal(_) => () }
       }
-      try Tables.events(spark, sfDir).count() catch { case _: Throwable => () }
+      try Tables.events(spark, sfDir).count() catch { case NonFatal(_) => () }
     }
     // iteration knobs: SPARK_GRAFT_ONLY restricts the timed set to a
     // comma-separated name list; SPARK_GRAFT_REPEAT times each query N
@@ -193,7 +195,7 @@ object Bench {
             l.split("\\s+")(1).toDouble / (1 << 20)
         }.getOrElse(-1.0)
         finally src.close()
-      } catch { case _: Throwable => -1.0 }
+      } catch { case NonFatal(_) => -1.0 }
     val cacheGbPre = cachedGb()
     sentinelOnce() // untimed JIT warmup of the loop itself
     val sentinelPre = sentinelOnce()
@@ -343,7 +345,7 @@ object Bench {
                     && refCpus == cpus.toInt)
                   Some((p, node))
                 else None
-              } catch { case _: Throwable => None }
+              } catch { case NonFatal(_) => None }
             }
             .sortBy(pn => refOrder(pn._1.getFileName.toString))
             .takeRight(3)
@@ -365,7 +367,7 @@ object Bench {
                     if (iso >= 0 && best.contains(e.getKey))
                       best(e.getKey) = math.max(best(e.getKey), iso)
                   }
-              } catch { case _: Throwable => () }
+              } catch { case NonFatal(_) => () }
             }
           }
           val newest = scala.collection.mutable.Map.empty[String, Double]
@@ -377,10 +379,10 @@ object Bench {
           }
           (best.toMap, newest.toMap)
         }
-      } catch { case _: Throwable => (Map.empty, Map.empty) }
+      } catch { case NonFatal(_) => (Map.empty, Map.empty) }
     def timedPass(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { fn(spark, sfDir).count(); true } catch { case NonFatal(_) => false }
       if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
     }
     // cold (first-pass) total, reported alongside the min-of-N total:
@@ -495,7 +497,7 @@ object Bench {
       try walk.filter(java.nio.file.Files.isRegularFile(_))
         .mapToLong(java.nio.file.Files.size(_)).sum > (1L << 30)
       finally walk.close()
-    } catch { case _: Throwable => false }
+    } catch { case NonFatal(_) => false }
     val cpuSpreadBand = if (heavyCorpus) 4.5 else 1.8
     def windowClean(cpu: Seq[Double], io: Seq[Double], gc: Double,
         tot: Double): Boolean = {
@@ -690,7 +692,7 @@ object Bench {
           }
         }.mkString("{", ",", "}")
       }
-    } catch { case _: Throwable => "{}" }
+    } catch { case NonFatal(_) => "{}" }
     // value_cold = value + memo_build_s (VERDICT_r16 #6): the number a
     // memo-shift can never improve — every memo-backed claim must cite
     // it. cpus rides along so bench_refs floors can be core-classed.
@@ -706,7 +708,7 @@ object Bench {
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get(sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH.json")),
       fullJson + "\n")
-    catch { case e: Throwable =>
+    catch { case NonFatal(e) =>
       System.err.println(s"[bench] WARN could not write BENCH.json: $e") }
     finalResults.filter { case (_, v) => v >= 0 && v > 0.2 * total }.foreach { case (k, v) =>
       // ASCII only: the driver's capture mangles non-ASCII to '?'

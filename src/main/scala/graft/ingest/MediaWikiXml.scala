@@ -81,8 +81,8 @@ object MediaWikiXml {
       coalesce(col("_VALUE"), lit("")).as("ns_name"),
       col("_case").as("ns_case"))
 
-  /** A2: the `<siteinfo>` namespace map as a lookup table (broadcast
-    * side of every classification join). key=0 has an empty name. */
+  /** A2: the `<siteinfo>` namespace map as a lookup table (the one
+    * [[classify]] looks revisions up in). key=0 has an empty name. */
   def readNamespaces(spark: SparkSession, path: String): DataFrame =
     namespaceCols(spark.read.format("xml")
       .option("rowTag", "namespace")
@@ -146,12 +146,33 @@ object MediaWikiXml {
     df.as[FlatRevision]
   }
 
-  /** A9: namespace classification via broadcast join; an article is
-    * ns 0 and not a redirect. */
-  def classify(flat: DataFrame, namespaces: DataFrame): DataFrame =
-    flat.join(broadcast(namespaces), col("ns") === col("ns_key"), "left")
+  /** A9: namespace classification; an article is ns 0 and not a
+    * redirect. The namespace table (a `<siteinfo>` has a few dozen
+    * entries) is collected to the driver and looked up from a literal
+    * map, with a LEFT join's rows: every revision once, its namespace's
+    * other columns appended, NULL where `ns` has no entry. Collecting
+    * the header frame of [[Multistream.readNamespaces]] runs no Spark
+    * job, and the lookup adds no broadcast stage to the consuming job.
+    * A null `ns_key` matches nothing, as in the join; a duplicated
+    * one fails here, where the join would duplicate revisions. */
+  def classify(flat: DataFrame, namespaces: DataFrame): DataFrame = {
+    import org.apache.spark.sql.GraftShims.column
+    import org.apache.spark.sql.catalyst.expressions.Literal
+    val valueFields = namespaces.schema.fields.filter(_.name != "ns_key")
+    val entries = namespaces
+      .select(col("ns_key") +: valueFields.map(f => col(f.name)).toSeq: _*)
+      .collect().filterNot(_.isNullAt(0))
+      .map(r => r.get(0) -> org.apache.spark.sql.Row.fromSeq(r.toSeq.tail))
+    val dups = entries.groupBy(_._1).collect { case (k, es) if es.length > 1 => k }
+    require(dups.isEmpty, s"duplicate namespace keys ${dups.mkString(", ")}: " +
+      "a lookup must match a revision at most once")
+    val valueType = StructType(valueFields)
+    val lookup = column(Literal.create(entries.toMap,
+      MapType(namespaces.schema("ns_key").dataType, valueType, valueContainsNull = false)))
+    val ns = element_at(lookup, col("ns"))
+    flat.select(col("*") +: valueFields.map(f => ns.getField(f.name).as(f.name)).toSeq: _*)
       .withColumn("is_article", col("ns") === 0 && !col("is_redirect"))
-      .drop("ns_key")
+  }
 
   /** A10: recompute MediaWiki's base-36 sha1 (31 chars, zero-padded)
     * and compare against the dump's `<sha1>`. */

@@ -766,18 +766,22 @@ object VectorOps {
     * any corpus size (q208's report references its assignments through
     * 3 levels of nesting, so each removed exchange was being paid
     * several times per invocation). Emits (vec_id, embedding, score,
-    * label). */
+    * label). An empty quantizer has no nearest cell: assigning a vector
+    * to it fails, in the same projection, instead of labelling it
+    * null. */
   private def argminMapOnly(vecs: DataFrame, cents: DataFrame): DataFrame = {
     val centArr = cents
       .agg(collect_list(struct(col("label"), col("cv"), col("cnorm")))
         .as("__cents"))
     vecs.crossJoin(broadcast(centArr))
-      .withColumn("__best", array_min(transform(col("__cents"), c =>
-        struct(
-          (c.getField("cnorm") -
-            lit(2.0) * dotFast(col("embedding"), c.getField("cv")))
-            .as("score"),
-          c.getField("label").as("label")))))
+      .withColumn("__best", when(size(col("__cents")) === 0,
+        raise_error(lit("argminMapOnly: empty quantizer, no cell to assign a vector to")))
+        .otherwise(array_min(transform(col("__cents"), c =>
+          struct(
+            (c.getField("cnorm") -
+              lit(2.0) * dotFast(col("embedding"), c.getField("cv")))
+              .as("score"),
+            c.getField("label").as("label"))))))
       .withColumn("score", col("__best").getField("score"))
       .withColumn("label", col("__best").getField("label"))
       .drop("__cents", "__best")

@@ -151,17 +151,17 @@ object XmlOps {
   /** q214: A2+A9 under the oracle (VERDICT_r15 #5) — the last
     * relational A-legs that were spec-only: the `<siteinfo>`
     * namespace-map decode (self-closing key-0 element included) and
-    * the REAL [[MediaWikiXml.classify]] broadcast join, run over
-    * q206's flattened revisions. The oracle recomputes the namespace
-    * name, case and is_article flag from the generator arithmetic, so
-    * a key binding lost in the attribute decode, a broken empty-name
-    * coalesce, a join that drops the unmatched-namespace rows (ns=4
+    * the REAL [[MediaWikiXml.classify]] lookup, run over q206's
+    * flattened revisions. The oracle recomputes the namespace name,
+    * case and is_article flag from the generator arithmetic, so a key
+    * binding lost in the attribute decode, a broken empty-name
+    * coalesce, a lookup that drops the unmatched-namespace rows (ns=4
     * has no key — the LEFT join contract), or a wrong is_article
     * conjunction all break the hash.
     *
-    * Scale shape: q206's map-only parse + ONE broadcast hash join
-    * against a ≤|namespaces| lookup — exactly the dump-ingest classify
-    * plan A9 runs on real files. */
+    * Scale shape: q206's map-only parse + ONE literal-map lookup of a
+    * ≤|namespaces| table collected to the driver — exactly the
+    * dump-ingest classify plan A9 runs on real files. */
   def namespaceClassify(s: SparkSession, d: String): DataFrame = {
     val parsed = generatedPages(s, d)
       .select(from_xml(col("x"), MediaWikiXml.pageSchema).as("p"))
@@ -191,5 +191,5 @@ object XmlOps {
       "A1-A9 under the oracle: synthesized mini dump -> from_xml -> flatten"),
     QueryDef("q214_namespace_classify", namespaceClassify,
       Some(namespaceClassifySql),
-      "A2+A9 under the oracle: siteinfo namespace decode + classify broadcast join"))
+      "A2+A9 under the oracle: siteinfo namespace decode + classify lookup"))
 }

@@ -2,8 +2,9 @@ package graft
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.ingest.CorpusExport
@@ -104,6 +105,58 @@ class CorpusExportSpec extends AnyFunSuite with LocalSparkSuite {
     val expected = CorpusExport.manifest(sharded).collect().toSeq
     assert(written.collect().toSeq === expected)
     assert(spark.read.parquet(s"$dir/_manifest").collect().toSeq === expected)
+  }
+
+  /** The `_manifest` columns as parquet returns them. */
+  private val manifestSchema = StructType(Seq(
+    StructField("lang", StringType), StructField("shard", IntegerType),
+    StructField("n_docs", LongType), StructField("n_bytes", LongType),
+    StructField("content_fp", DecimalType(38, 0))))
+
+  test("_manifest and verifyExport schemas: names, types, nullability") {
+    val dir = Files.createTempDirectory("graftschema").toString
+    val written = CorpusExport.exportJsonl(docs, dir, target)
+    assert(written.schema === manifestSchema)
+    assert(spark.read.parquet(s"$dir/_manifest").schema === manifestSchema)
+    // the manifest ships as one file
+    assert(new java.io.File(dir, "_manifest").listFiles()
+      .count(_.getName.endsWith(".parquet")) === 1)
+    assert(CorpusExport.verifyExport(spark, dir).schema ===
+      manifestSchema.add(StructField("side", StringType, nullable = false)))
+  }
+
+  test("a shard of null-text docs: n_docs counts them, n_bytes is null") {
+    def payload(ids: org.apache.spark.sql.Dataset[_], text: Column, lang: String) =
+      ids.select(col("id").as("doc_id"), text.as("text"), lit(lang).as("lang"),
+        lit("s").as("source"), lit(0L).as("n_chars"))
+    val nullText = payload(spark.range(1, 4), lit(null).cast("string"), "nt")
+    val input = nullText.unionByName(payload(spark.range(10, 12), lit("abc"), "tx"))
+    val dir = Files.createTempDirectory("graftnulltext").toString
+    CorpusExport.exportJsonl(input, dir, target)
+    val rows = spark.read.parquet(s"$dir/_manifest").collect()
+    assert(rows.map(r => (r.getString(0), r.getInt(1))).toSeq === Seq(("nt", 0), ("tx", 0)))
+    val nt = rows(0)
+    assert(nt.getLong(2) === 3L)
+    assert(nt.isNullAt(3))
+    // xxhash64 skips a null argument: the fingerprint term of a
+    // null-text doc is its doc_id's hash, so the sum is not null
+    val fp = nullText.select(sum(xxhash64(col("doc_id"), col("text"))
+      .cast("decimal(38,0)"))).head().getDecimal(0)
+    assert(nt.getDecimal(4) === fp)
+    assert(rows(1).getLong(2) === 2L && rows(1).getLong(3) === 8L)
+    assert(CorpusExport.verifyExport(spark, dir).count() === 0)
+  }
+
+  test("_manifest rows are in (lang, shard) order") {
+    val twoLangs = docs.withColumn("lang",
+      when(col("doc_id") % 2 === 0, lit("de")).otherwise(lit("en")))
+    val dir = Files.createTempDirectory("graftorder").toString
+    val written = CorpusExport.exportJsonl(twoLangs, dir, 2048L)
+    val keys = spark.read.parquet(s"$dir/_manifest").collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq
+    assert(keys.groupBy(_._1).count(_._2.size >= 2) >= 2, s"want 2 langs x 2 shards: $keys")
+    assert(keys === keys.sorted)
+    assert(written.collect().map(r => (r.getString(0), r.getInt(1))).toSeq === keys)
   }
 
   test("shipped manifest verifies against the files on disk; corruption is caught") {

@@ -124,6 +124,27 @@ class IngestSpec extends AnyFunSuite with LocalSparkSuite {
     assert(articles === Set(1L, 3L, 4L, 5L, 6L, 8L)) // not 2 (redirect), not 7 (ns 1)
   }
 
+  test("A9 classify: a LEFT join's rows and schema; a duplicated key fails") {
+    def joined(lookup: org.apache.spark.sql.DataFrame) =
+      flat.join(broadcast(lookup), col("ns") === col("ns_key"), "left")
+        .withColumn("is_article", col("ns") === 0 && !col("is_redirect"))
+        .drop("ns_key")
+    val got = MediaWikiXml.classify(flat, ns)
+    val want = joined(ns)
+    assert(got.schema === want.schema)
+    assert(got.exceptAll(want).count() === 0 && want.exceptAll(got).count() === 0)
+    // ns 1 (page 7) has no entry here, and the null key matches nothing
+    import spark.implicits._
+    val partial = Seq[(Integer, String, String)]((0, "", "first-letter"), (null, "None", "x"))
+      .toDF("ns_key", "ns_name", "ns_case")
+    val talk = MediaWikiXml.classify(flat, partial).filter(col("page_id") === 7)
+      .select("ns_name", "ns_case").collect()
+    assert(talk.nonEmpty && talk.forall(r => r.isNullAt(0) && r.isNullAt(1)))
+    val e = intercept[IllegalArgumentException](
+      MediaWikiXml.classify(flat, partial.unionByName(partial.limit(1))))
+    assert(e.getMessage.contains("duplicate namespace keys 0"))
+  }
+
   test("A10 sha1 verify: base-36, 31 chars, deterministic vs JDK digest") {
     val v = MediaWikiXml.verifySha1(flat.filter(col("page_id") === 1))
     val got = v.head().getAs[String]("sha1_computed")

@@ -128,6 +128,15 @@ class VectorServingSpec extends AnyFunSuite with LocalSparkSuite {
     assert(lloyd.nonEmpty && tr > 0.1)
   }
 
+  test("assigning vectors to an empty quantizer fails with a named error") {
+    import graft.ops.VectorOps
+    val empty = VectorOps.ivfCentroids(spark, sfDir).limit(0)
+    val e = intercept[Exception](
+      VectorOps.lloydAssign(spark, sfDir, empty).collect())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("empty quantizer")), e)
+  }
+
   test("q156 delta report equals a brute-force old-slice index + full reassignment") {
     // centroids from the OLD slice with the operator's exact-decimal
     // means (per-value DECIMAL(28,8) quantization, double division)

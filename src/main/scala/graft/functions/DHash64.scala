@@ -13,7 +13,7 @@ import org.apache.spark.sql.types.{BinaryType, DataType, LongType}
   *
   * Two tiers, one code path (the q54 decode-stub contract):
   *  - payloads that decode as one of the pure-JVM image formats
-  *    (PPM/BMP/PNG/JPEG/GIF/VP8L-WebP, [[graft.ops.MultimodalOps]])
+  *    (PPM/BMP/PNG, [[graft.ops.MultimodalOps]])
   *    hash their PIXELS: an 8×9 grid of integer luma strip sums
   *    (BT.709 weights ×10000 — exact integer arithmetic, no float
   *    rounding in the bits) accumulated inside the decoder's existing

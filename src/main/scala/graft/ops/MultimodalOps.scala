@@ -9,23 +9,17 @@ import graft.{QueryDef, Tables}
   * columns with typed metadata, decode → feature-extract over
   * mapPartitions.
   *
-  * Decode is two-tier. Payloads in one of the seven pure-JVM-decodable
-  * image formats — binary PPM ("P6"), 24-bit uncompressed BMP, 8-bit
-  * non-interlaced PNG, baseline+progressive JPEG, GIF 87a/89a (LZW),
-  * lossless WebP ([[WebpDecoder]]: VP8L prefix codes, LZ77,
-  * color cache, subtract-green), and lossy WebP keyframes
-  * ([[Vp8Decoder]]: RFC 6386 bool decoder, token trees, dequant,
-  * IDCT/WHT, 16×16 AND per-subblock 4×4 (B_PRED) intra prediction —
-  * see its conformance note; the remaining boundary is the
-  * engine-local default probability tables) — take the REAL decode
-  * path
-  * ([[decodeImage]]: magic sniff, header/entropy parse, per-channel
-  * stats), exercised end-to-end on checked-in and generated fixture
-  * bytes by MultimodalSpec/JpegDecoderSpec/WebpDecoderSpec/
-  * Vp8DecoderSpec. Everything
-  * else falls back to `decodeStub`, a clearly-marked deterministic
-  * stand-in (byte histogram) for the codecs still outside the pure-JVM
-  * tier (PCM/H.264). Around both tiers sits the real Spark
+  * Decode is two-tier. Payloads in one of the three pure-JVM-decodable
+  * image formats — binary PPM ("P6"), 24-bit uncompressed BMP and
+  * static PNG — take the REAL decode path
+  * ([[decodeImage]]: magic sniff, header/raster parse, per-channel
+  * stats), exercised end-to-end on checked-in fixture bytes by
+  * MultimodalSpec/PngDecoderSpec. RIFF/WAVE PCM audio takes the real
+  * audio tier ([[decodeAudio]]). Everything else — compressed image
+  * formats (JPEG, GIF, WebP) included — falls back to `decodeStub`, a
+  * clearly-marked deterministic stand-in (byte histogram) for the
+  * codecs outside the pure-JVM tier (compressed image/audio, H.264).
+  * Around both tiers sits the real Spark
   * plumbing a production pipeline needs and what the tests cover:
   * declared binary schema, partition-local batch processing (one
   * reusable buffer per partition, the mapPartitions analog of a
@@ -109,27 +103,18 @@ object MultimodalOps {
       d.isDefined
     }
     attempt(decodePpm(payload, grid)) || attempt(decodeBmp(payload, grid)) ||
-      attempt(decodePng(payload, grid)) ||
-      attempt(JpegDecoder.decode(payload, grid)) ||
-      attempt(GifDecoder.decode(payload, grid)) ||
-      attempt(WebpDecoder.decode(payload, grid)) ||
-      attempt(Vp8Decoder.decode(payload, grid))
+      attempt(decodePng(payload, grid))
   }
 
   /** REAL pure-JVM decode of binary PPM (P6), 24-bit uncompressed
-    * BMP, full static PNG (grey/RGB/palette/grey-alpha/RGBA at every
-    * legal bit depth, non-interlaced and Adam7; zlib inflate via
-    * `java.util.zip.Inflater`), and baseline sequential JPEG
-    * ([[JpegDecoder]]: Huffman + IDCT + 4:2:0/4:2:2/4:4:4 chroma,
-    * zero native codecs). Returns None unless the payload is a
-    * complete well-formed image: a truncated file or a coincidental
-    * magic match must fall back to the histogram tier, never produce
-    * garbage features. */
+    * BMP and full static PNG (grey/RGB/palette/grey-alpha/RGBA at
+    * every legal bit depth, non-interlaced and Adam7; zlib inflate via
+    * `java.util.zip.Inflater`), zero native codecs. Returns None unless
+    * the payload is a complete well-formed image: a truncated file, a
+    * coincidental magic match or any other format must fall back to
+    * the histogram tier, never produce garbage features. */
   private[graft] def decodeImage(payload: Array[Byte]): Option[DecodedImage] =
     decodePpm(payload).orElse(decodeBmp(payload)).orElse(decodePng(payload))
-      .orElse(JpegDecoder.decode(payload)).orElse(GifDecoder.decode(payload))
-      .orElse(WebpDecoder.decode(payload))
-      .orElse(Vp8Decoder.decode(payload))
 
   private def decodePpm(p: Array[Byte], grid: Array[Long] = null): Option[DecodedImage] = {
     if (p.length < 2 || p(0) != 'P'.toByte || p(1) != '6'.toByte) return None
@@ -629,7 +614,7 @@ object MultimodalOps {
     * over the image-modality binary column, the q105 SimHash
     * machinery pointed at pixels instead of tokens. Every real
     * multimodal corpus dedups re-encoded frames; the pixel tier of
-    * [[graft.functions.DHash64]] hashes what the six pure-JVM
+    * [[graft.functions.DHash64]] hashes what the PPM/BMP/PNG
     * decoders see (spec-graded: PerceptualDHashSpec proves a
     * one-pixel edit moves ≤ 2 bits and the banded join equals a
     * brute-force Hamming scan), while this graded instance runs the

@@ -247,45 +247,6 @@ object GraftProps extends Properties("graft") {
     }
   }
 
-  // Round-13 VP8 coefficient path: a block of random quantized levels
-  // token-encodes and decodes back to the identical dequantized block
-  // under ANY (band, ctx)-varying probability table — the bitstream
-  // grammar (EOB-after-zero exclusion, category extra bits, signs) is
-  // what this pins, independent of the fixture frames.
-  property("VP8 coefficient block roundtrips for random levels, probs, contexts") = {
-    import graft.ops.Vp8Decoder
-    val level = Gen.frequency(
-      6 -> Gen.const(0), 3 -> Gen.chooseNum(-4, 4),
-      2 -> Gen.chooseNum(-20, 20), 1 -> Gen.chooseNum(-2000, 2000))
-    val g = for {
-      levels <- Gen.listOfN(16, level)
-      first <- Gen.oneOf(0, 1)
-      bt <- Gen.chooseNum(0, 3)
-      ctx <- Gen.chooseNum(0, 2)
-      seed <- Gen.chooseNum(1, 1000000)
-    } yield (levels.toArray, first, bt, ctx, seed)
-    forAll(g) { case (levels, first, bt, ctx, seed) =>
-      if (first == 1) levels(0) = 0 // Y-after-Y2 blocks carry no DC token
-      val probs = Array.tabulate(4, 8, 3, 11)((t, b, c, l) =>
-        ((t * 31 + b * 17 + c * 13 + l * 7 + seed) % 253) + 1)
-      val be = new Vp8TestCodec.BoolEncoder
-      Vp8TestCodec.encodeCoeffs(be, levels, bt, first, probs, ctx)
-      val bytes = be.finish()
-      val d = new Vp8Decoder.BoolDecoder(bytes, 0, bytes.length)
-      val out = new Array[Int](16)
-      val nz = Vp8Decoder.decodeCoeffs(d, out, bt, first, probs, 3, 7, ctx)
-      val expect = new Array[Int](16)
-      var i = first
-      while (i < 16) {
-        val nat = Vp8Decoder.Zigzag(i)
-        expect(nat) = levels(nat) * (if (i == 0) 3 else 7)
-        i += 1
-      }
-      val anyNz = (first until 16).exists(i => levels(Vp8Decoder.Zigzag(i)) != 0)
-      out.toSeq == expect.toSeq && nz == anyNz && !d.overrun
-    }
-  }
-
   // q181's CDC chunking is a PARTITION of the token stream: chunks
   // reassemble to the original text, every boundary is a hash-zero
   // position, and every interior hash-zero position is a boundary

@@ -79,10 +79,15 @@ class MultimodalSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("extractFeatures routes real images to the decode tier, text to the histogram tier") {
     import spark.implicits._
+    val px = (x: Int, y: Int) => (x * 40 % 256, y * 60 % 256, (x + y) * 20 % 256)
+    val jpeg = ImageIoBytes.encode(6, 4, px, "jpeg")
+    val gif = ImageIoBytes.encode(6, 4, px, "gif")
     val mixed = Seq(
       MultimodalOps.Asset(1L, "image", fixture("fixture_4x3.ppm"), 64, 16000),
       MultimodalOps.Asset(2L, "image", fixture("fixture_3x2.bmp"), 64, 16000),
-      MultimodalOps.Asset(3L, "image", "plain text payload".getBytes, 64, 16000)).toDS()
+      MultimodalOps.Asset(3L, "image", "plain text payload".getBytes, 64, 16000),
+      MultimodalOps.Asset(5L, "image", jpeg, 64, 16000),
+      MultimodalOps.Asset(6L, "image", gif, 64, 16000)).toDS()
     val f = MultimodalOps.extractFeatures(mixed).collect().sortBy(_.asset_id)
     assert(f(0).features.toSeq === Seq(4f, 3f, 15f / 255, 10f / 255, 2.5f / 255, 0f, 0f, -1f))
     assert(f(1).features.toSeq === Seq(3f, 2f, 0.5f, 0f, 0.5f, 0f, 0f, -1f))
@@ -90,6 +95,13 @@ class MultimodalSpec extends AnyFunSuite with LocalSparkSuite {
     // for an all-high-byte payload — hence the real tier's negative
     // marker), vector sums to 1
     assert(f(2).features(7) >= 0f && math.abs(f(2).features.sum - 1f) < 1e-3)
+    // compressed image formats have no pixel tier: exactly the stub's
+    // byte histogram, no real-tier marker
+    for ((bytes, r) <- Seq(jpeg, gif).zip(f.drop(3))) {
+      val bins = new Array[Float](8)
+      bytes.foreach(b => bins((b & 0xff) >> 5) += 1f)
+      assert(r.features.toSeq === bins.map(_ / bytes.length).toSeq)
+    }
     // the collision case the negative marker exists for: all-0xFF bytes
     // put exactly 1.0 in bin 7, which a [0,1]-valued marker would alias
     val ff = MultimodalOps.extractFeatures(

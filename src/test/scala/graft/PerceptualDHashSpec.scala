@@ -3,7 +3,7 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.functions.DHash64
-import graft.ops.{GifDecoder, MultimodalOps}
+import graft.ops.MultimodalOps
 
 /** Perceptual dHash (q166): the pixel tier over real decoded images,
   * the byte tier against an independent BigInt reimplementation, and
@@ -103,6 +103,13 @@ class PerceptualDHashSpec extends AnyFunSuite with LocalSparkSuite {
     for ((w, h) <- Seq((7, 5), (9, 8), (40, 31)))
       assert(DHash64.hash(ppm(w, h, pixel)) === DHash64.hash(bmp(w, h, pixel)),
         s"dims ${w}x$h")
+    // a third, independently written encoding: the JDK's PNG writer
+    for ((w, h) <- Seq((36, 24), (7, 5), (40, 31))) {
+      val png = ImageIoBytes.encode(w, h, pixel, "png")
+      assert(MultimodalOps.decodeGrid(png, new Array[Long](144)),
+        s"${w}x$h ImageIO PNG must take the pixel tier")
+      assert(DHash64.hash(png) === DHash64.hash(ppm(w, h, pixel)), s"PNG dims ${w}x$h")
+    }
   }
 
   test("one-pixel edit moves the hash at most 2 bits (the dedup locality guarantee)") {
@@ -127,20 +134,20 @@ class PerceptualDHashSpec extends AnyFunSuite with LocalSparkSuite {
     assert(grid.toSeq === bruteGrid(6, 5, (x, y) => (10 * x, 10 * y, x + y)).toSeq)
   }
 
-  test("GIF interlace row mapping is a bijection onto 0 until h") {
-    for (h <- 1 to 50)
-      assert((0 until h).map(GifDecoder.interlaceRow(h, _)).sorted === (0 until h),
-        s"h=$h")
-  }
-
   // ---- byte tier ------------------------------------------------------
 
   test("byte tier equals the independent reimplementation; undecodable payloads take it") {
     val rnd = new scala.util.Random(42)
-    for (n <- Seq(0, 1, 5, 71, 72, 73, 300, 4096)) {
+    val random = Seq(0, 1, 5, 71, 72, 73, 300, 4096).map { n =>
       val p = new Array[Byte](n)
       rnd.nextBytes(p)
       if (n > 0) p(0) = 'x'.toByte // never a magic byte
+      p
+    }
+    // real JPEG and GIF files: formats outside the pixel tier hash their bytes
+    val compressed = Seq("jpeg", "gif").map(ImageIoBytes.encode(36, 24, pixel, _))
+    for (p <- random ++ compressed) {
+      val n = p.length
       val grid = new Array[Long](144)
       assert(!MultimodalOps.decodeGrid(p, grid), s"n=$n must not decode")
       DHash64.byteStrips(p, grid)

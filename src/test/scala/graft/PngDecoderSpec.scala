@@ -6,9 +6,9 @@ import graft.ops.MultimodalOps
 
 /** Full-static-PNG coverage added in round 11: Adam7 interlace,
   * 16-bit samples, palette and greyscale color types. Verified
-  * against a TEST-SIDE FROM-THE-SPEC ENCODER (the WebpDecoderSpec
-  * posture — ImageIO cannot write interlaced/16-bit/sub-8-bit PNGs,
-  * so the reference is a minimal encoder that can): filter type 0
+  * against a TEST-SIDE FROM-THE-SPEC ENCODER (ImageIO cannot write
+  * interlaced/16-bit/sub-8-bit PNGs, so the reference is a minimal
+  * encoder that can): filter type 0
   * scanlines, MSB-first bit packing, big-endian 16-bit samples,
   * Adam7 pass order, real zlib and CRC32. Every decode is compared
   * EXACTLY (means are rationals over integer sums). */

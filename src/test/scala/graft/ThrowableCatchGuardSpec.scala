@@ -1,116 +1,37 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Guard: no handler in main code catches every `Throwable`. A
-  * `case _: Throwable` / `case t: Throwable =>` handler, or an untyped
-  * `case t =>` catch-all (which catches the same), swallows fatal
-  * errors — OutOfMemoryError, StackOverflowError, InterruptedException
-  * — that must reach the caller. Use `case NonFatal(e) =>` instead. */
+/** Guard: no catch handler in main code matches `Throwable`. A
+  * `case _: Throwable` / `case t: Throwable =>` handler swallows fatal
+  * errors (OutOfMemoryError, StackOverflowError, InterruptedException)
+  * that must reach the caller; catch `NonFatal(e)` instead. The scan
+  * is textual: it flags a Throwable type pattern after `case`, so a
+  * `Throwable` parameter or value type is not flagged. */
 class ThrowableCatchGuardSpec extends AnyFunSuite {
 
-  /** `src` with comments, string and char literals blanked to spaces
-    * (newlines kept, so offsets still map to the same lines). */
-  private def codeOnly(src: String): String = {
-    val out = new StringBuilder(src.length)
-    var i = 0
-    def blankTo(end: Int): Unit = {
-      while (i < math.min(end, src.length)) {
-        out += (if (src(i) == '\n') '\n' else ' '); i += 1
-      }
-    }
-    // end of the first `close` at or after `from`; end of input if none
-    def past(close: String, from: Int): Int = src.indexOf(close, from) match {
-      case -1 => src.length
-      case j => j + close.length
-    }
-    def at(j: Int): Char = if (j < src.length) src(j) else '\u0000'
-    while (i < src.length) {
-      if (src.startsWith("//", i)) blankTo(past("\n", i))
-      else if (src.startsWith("/*", i)) blankTo(past("*/", i + 2))
-      else if (src.startsWith("\"\"\"", i)) blankTo(past("\"\"\"", i + 3))
-      else if (src(i) == '"') {
-        var j = i + 1
-        while (j < src.length && src(j) != '"' && src(j) != '\n')
-          j += (if (src(j) == '\\') 2 else 1)
-        blankTo(j + 1)
-      } else if (src(i) == '\'' && at(i + 1) == '\\') blankTo(past("'", i + 3))
-      else if (src(i) == '\'' && at(i + 2) == '\'') blankTo(i + 3)
-      else { out += src(i); i += 1 }
-    }
-    out.toString
-  }
+  private val throwableCase =
+    """\bcase\s+(?:\w+|_)\s*:\s*(?:_root_\.)?(?:java\.lang\.|scala\.)?Throwable\b""".r
 
-  private val throwableType =
-    """:\s*(?:_root_\.)?(?:java\.lang\.|scala\.)?Throwable\b""".r
-  private val catchAll = """^\s*(?:\w+|_)\s*$""".r
-
-  /** 1-based lines of the `catch { case … }` handlers in `src` whose
-    * pattern matches every Throwable. Only top-level cases of a catch
-    * block count: a `match` nested inside a handler body is not a
-    * handler. */
-  private def throwableCatches(src: String): Seq[Int] = {
-    val code = codeOnly(src)
-    def lineOf(off: Int): Int = code.substring(0, off).count(_ == '\n') + 1
-    """\bcatch\b""".r.findAllMatchIn(code).toSeq.flatMap { m =>
-      var i = m.end
-      while (i < code.length && code(i).isWhitespace) i += 1
-      if (i >= code.length || code(i) != '{') Nil
-      else {
-        val hits = Seq.newBuilder[Int]
-        var depth = 0
-        var done = false
-        while (i < code.length && !done) {
-          code(i) match {
-            case '{' => depth += 1; i += 1
-            case '}' => depth -= 1; i += 1; done = depth == 0
-            case _ if depth == 1 && code.startsWith("case", i) &&
-                !code(i - 1).isLetterOrDigit && i + 4 < code.length &&
-                !code(i + 4).isLetterOrDigit =>
-              val arrow = code.indexOf("=>", i)
-              val pattern = code.substring(i + 4, if (arrow < 0) code.length else arrow)
-              if (throwableType.findFirstIn(pattern).isDefined ||
-                  catchAll.findFirstIn(pattern).isDefined) hits += lineOf(i)
-              i += 4
-            case _ => i += 1
-          }
-        }
-        hits.result()
-      }
-    }
-  }
+  /** 1-based lines of the Throwable case patterns in `src`. */
+  private def flagged(src: String): Seq[Int] =
+    throwableCase.findAllMatchIn(src).map(m => src.take(m.start).count(_ == '\n') + 1).toSeq
 
   test("no catch handler in src/main/scala matches Throwable") {
-    val files = Files.walk(Paths.get("src/main/scala")).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    // the scan itself: both handler forms flag, a Throwable parameter does not
+    assert(flagged("try f() catch { case _: Throwable => () }") === Seq(1))
+    assert(flagged("try f()\ncatch {\n  case t: java.lang.Throwable =>\n}") === Seq(3))
+    assert(flagged("def states(t: Throwable): Seq[String] = t match {") === Nil)
+    val walk = Files.walk(Paths.get("src/main/scala"))
+    val files = try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+      finally walk.close()
     assert(files.exists(_.endsWith(Paths.get("graft/ingest/Sinks.scala"))),
       "main sources not found from the working directory")
-    val found = files.flatMap { (f: Path) =>
-      throwableCatches(Files.readString(f)).map(line => s"$f:$line")
-    }
+    val found = files.flatMap(f => flagged(Files.readString(f)).map(line => s"$f:$line"))
     assert(found.isEmpty, s"catch handlers matching Throwable: ${found.mkString(", ")}")
-  }
-
-  test("the scanner flags Throwable and catch-all handlers, nothing else") {
-    val flagged = Seq(
-      "try f() catch { case _: Throwable => () }",
-      "try f() catch {\n  case t: Throwable =>\n    log(t)\n}",
-      "try f() catch { case e: java.lang.Throwable if ok(e) => () }",
-      "try f() catch { case e: IOException => (); case t => () }")
-    flagged.foreach(s => assert(throwableCatches(s).size === 1, s))
-    val clean = Seq(
-      // a Throwable parameter (Sinks' rollback diagnostics) is no catch
-      "def states(t: Throwable): Seq[String] = t match { case _ => Nil }",
-      "try f() catch { case NonFatal(e) => g(e) match { case t => t } }",
-      "try f() catch { case _: java.sql.SQLException => () }",
-      "// try f() catch { case _: Throwable => () }",
-      "val s = \"catch { case _: Throwable => }\"",
-      "val c = '{'; try f() catch { case NonFatal(_) => () }")
-    clean.foreach(s => assert(throwableCatches(s).isEmpty, s))
-    assert(throwableCatches("val x = 1\ntry f()\ncatch { case _: Throwable => }") === Seq(3))
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Loaders for the driver parquet tables (TESTDATA.md / FIXTURES.md §1).
@@ -105,23 +105,4 @@ object Tables {
   }
   def documents(s: SparkSession, d: String): DataFrame = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
-
-  /** Typed boundary for the corpus tables (SURVEY §1.2: case-class
-    * Datasets at the API edge, DataFrame internally — Catalyst
-    * optimizes both identically). The ingest side's typed twin is
-    * `MediaWikiXml.typedRevisions`. */
-  final case class Doc(doc_id: Long, text: String, lang: String,
-      source: String, n_chars: Long)
-
-  final case class Embedding(vec_id: Long, embedding: Array[Float], label: Int)
-
-  def documentsTyped(s: SparkSession, d: String): Dataset[Doc] = {
-    import s.implicits._
-    documents(s, d).as[Doc]
-  }
-
-  def embeddingsTyped(s: SparkSession, d: String): Dataset[Embedding] = {
-    import s.implicits._
-    embeddings(s, d).as[Embedding]
-  }
 }

@@ -82,13 +82,6 @@ object Multistream {
       .distinct().repartition(slices)
   }
 
-  /** Driver-side convenience over [[streamOffsetsRDD]] — FIXTURE-SCALE
-    * use (specs): collects the sorted distinct offsets. The ingest
-    * path itself never materializes them ([[readPages]] maps over the
-    * RDD). */
-  private[graft] def streamOffsets(spark: SparkSession, indexPath: String): Seq[Long] =
-    streamOffsetsRDD(spark, indexPath, 1).collect().sorted.toSeq
-
   /** Open the ONE bz2 stream that starts at `offset` as a decoding
     * Reader. `decompressConcatenated = false` stops the decoder at
     * that stream's end-of-stream marker, so a task never decodes a
@@ -145,20 +138,13 @@ object Multistream {
     }
   }
 
-  /** Split a decoded stream into its top-level `<page>…</page>`
-    * elements. Literal "</page>" cannot occur inside a well-formed
-    * dump's text nodes (XML escapes `<` as `&lt;`), so a linear scan
-    * is exact. */
-  private[graft] def splitPages(xml: String): Iterator[String] =
-    splitPagesStream(new java.io.StringReader(xml))
-
   /** Streaming page splitter: scans an incrementally-filled buffer for
     * `<page` / `</page>` pairs, emits each page, then DELETES the
     * consumed prefix so the buffer never holds more than one page (+
     * one read chunk, + a small tail that could hold a split `<page`
     * prefix between chunks). Literal "</page>" cannot occur inside a
     * well-formed dump's text nodes (XML escapes `<` as `&lt;`), so the
-    * linear scan is exact — same contract as the String form. */
+    * linear scan is exact. */
   private[graft] def splitPagesStream(reader: java.io.Reader): Iterator[String] =
     new Iterator[String] {
       private val buf = new java.lang.StringBuilder

@@ -4,7 +4,7 @@ import scala.util.control.NonFatal
 
 import org.apache.spark.sql.DataFrame
 
-/** Load-side of the reference's ETL (SURVEY.md §2.A11–A12).
+/** Load-side of the reference's ETL (SURVEY.md §2.A11).
   *
   * The reference batch-INSERTs into an RDBMS inside transactions of N
   * rows; the Spark equivalent is the JDBC writer with `batchsize` —
@@ -28,17 +28,6 @@ object Sinks {
       .option("batchsize", batchSize)
       .option("numPartitions", numPartitions)
       .mode("overwrite")
-      .save()
-
-  /** Append-mode twin of writeJdbc for incremental/streaming loads. */
-  def appendJdbc(df: DataFrame, url: String, table: String,
-      batchSize: Int = 1000): Unit =
-    df.write.format("jdbc")
-      .option("url", url)
-      .option("dbtable", table)
-      .option("driver", "org.apache.derby.jdbc.EmbeddedDriver")
-      .option("batchsize", batchSize)
-      .mode("append")
       .save()
 
   def readJdbc(spark: org.apache.spark.sql.SparkSession, url: String,
@@ -156,10 +145,4 @@ object Sinks {
         }
       }
   }
-
-  /** A12: incremental-import dedup — only revisions whose rev_id is not
-    * already in the sink survive (anti join on the natural key; at
-    * scale the existing side is a pruned column scan, not a full read). */
-  def newRevisionsOnly(incoming: DataFrame, existing: DataFrame): DataFrame =
-    incoming.join(existing.select("rev_id"), Seq("rev_id"), "left_anti")
 }

@@ -886,8 +886,7 @@ object CurationOps {
   /** The 16-bucket model collapsed to a 1-row (map) frame: the
     * broadcast "model" every scorer task holds, DSIR's hashed-LM
     * analog. Target = `targetSource` docs, raw = everything else,
-    * Laplace +1 both sides. Also the static side of the streaming
-    * [[graft.streaming.StreamingOps.dsirGate]]. */
+    * Laplace +1 both sides. */
   private[graft] def dsirModel(docs: DataFrame, targetSource: String): DataFrame = {
     val counts = dsirFeatures(docs)
       .select(col("source"), explode(col("bks")).as("b"))
@@ -896,9 +895,8 @@ object CurationOps {
         sum(when(col("source") =!= targetSource, 1L).otherwise(0L)).as("rc"))
     // Left-join the observed counts onto the literal 16-bucket frame so
     // EVERY hex bucket carries its Laplace-smoothed log-ratio: a doc
-    // whose bigram hashes into a bucket the fit corpus never saw (only
-    // possible for dsirGate's static model scoring a live stream) must
-    // score the smoothed default ln((0+1)/(tt+16)) − ln((0+1)/(rt+16)),
+    // whose bigram hashes into a bucket the fit corpus never saw (a
+    // model fit on one corpus scoring another) must score the smoothed default ln((0+1)/(tt+16)) − ln((0+1)/(rt+16)),
     // not NULL out of element_at. The DuckDB oracle's `h` CTE is this
     // same frame.
     val frame = docs.sparkSession.range(16)

@@ -548,37 +548,6 @@ object MultimodalOps {
     }
   }
 
-  /** Frame sampling: every `stride`-th 16-byte window as a "frame";
-    * bounds per-asset output no matter the payload size. */
-  def sampleFrames(assets: Dataset[Asset], stride: Int = 64): DataFrame = {
-    import assets.sparkSession.implicits._
-    assets.flatMap { a =>
-      val n = math.max(0, (a.payload.length - 16) / stride + 1)
-      (0 until math.min(n, 8)).map { f =>
-        (a.asset_id, f, a.payload.slice(f * stride, f * stride + 16))
-      }
-    }.toDF("asset_id", "frame_no", "frame_bytes")
-  }
-
-  /** Resize/resample: decimate each payload to a fixed target length
-    * (every k-th byte) — the "thumbnail"/downsample shape. Output width
-    * is constant per asset, so downstream batch shapes (fixed-width
-    * tensors) hold regardless of input size. Swap the decimation for a
-    * real scaler; the per-partition plumbing is the production shape. */
-  def resize(assets: Dataset[Asset], target: Int = 32): Dataset[(Long, Array[Byte])] = {
-    import assets.sparkSession.implicits._
-    assets.map { a =>
-      // empty payload → empty output (never fabricate bytes)
-      val out = new Array[Byte](math.min(target, a.payload.length))
-      val step = if (out.isEmpty) 1 else math.max(1, a.payload.length / out.length)
-      var i = 0
-      while (i < out.length && i * step < a.payload.length) {
-        out(i) = a.payload(i * step); i += 1
-      }
-      (a.asset_id, out)
-    }
-  }
-
   /** Graded query: per-modality feature summary through the decode
     * stub. Oracle-backed — the stub's bin 0 counts bytes < 0x20, which
     * SQL can count too (UTF-8 continuation bytes are ≥ 0x80, so

@@ -1248,11 +1248,10 @@ object StatsOps {
     * map-side bigram explode + three broadcast left joins + a doc-
     * keyed exact-decimal log-sum. Nothing shuffles at corpus grain
     * except the per-doc aggregate itself. */
-  /** The target-slice KN count frames shared by the batch scorer and
-    * the streaming gate's model builder: (bigram counts, left
-    * marginals, continuation counts, totals). */
-  private def knTargetParts(toks: DataFrame)
-      : (DataFrame, DataFrame, DataFrame, DataFrame) = {
+  def indomainPpl(s: SparkSession, d: String): DataFrame = {
+    val toks = Tables.documents(s, d)
+      .repartition(s.sparkContext.defaultParallelism)
+      .select(col("doc_id"), col("source"), split(col("text"), " ").as("tk"))
     def bigrams(df: DataFrame): DataFrame = df
       .filter(size(col("tk")) >= 2)
       .select(col("doc_id"), col("source"), explode(expr(
@@ -1267,54 +1266,6 @@ object StatsOps {
     val right = bc.groupBy(col("w2")).agg(count(lit(1)).as("nr"))
     val tot = bc.groupBy()
       .agg(count(lit(1)).as("nt"), countDistinct(col("w2")).as("nu"))
-    (bc, left, right, tot)
-  }
-
-  /** The q155 model collapsed to ONE row of map columns — the
-    * broadcast static side of
-    * [[graft.streaming.StreamingOps.indomainPplGate]], the dsirModel
-    * shape at bigram-type grain. Map sizes are bigram-TYPE-bounded
-    * (fixture ~1k entries; at a 10⁷-type production vocabulary the
-    * static side becomes a broadcast JOIN instead of a row map — the
-    * shapes q155 already demonstrates). */
-  private[graft] def indomainLmModel(s: SparkSession, d: String): DataFrame = {
-    val toks = Tables.documents(s, d)
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("tk"))
-    val (bc, left, right, tot) = knTargetParts(toks)
-    val m12 = bc.groupBy().agg(map_from_entries(collect_list(
-      struct(concat_ws(" ", col("w1"), col("w2")), col("c12")))).as("m12"))
-    val m1 = left.groupBy().agg(map_from_entries(collect_list(
-      struct(col("w1"), struct(col("c1"), col("nl"))))).as("m1"))
-    val mc = right.groupBy().agg(map_from_entries(collect_list(
-      struct(col("w2"), col("nr")))).as("mc"))
-    m12.crossJoin(m1).crossJoin(mc).crossJoin(tot)
-  }
-
-  /** The per-bigram KN probability over the [[indomainLmModel]] map
-    * columns — the streaming gate's scoring lambda body (x carries
-    * fields w1/w2); IDENTICAL formula and parenthesization to the
-    * batch scorer. */
-  private[graft] val knMapProbSql: String =
-    """CASE WHEN element_at(m1, x.w1) IS NOT NULL THEN
-      |  greatest(coalesce(element_at(m12, concat(x.w1, ' ', x.w2)), 0) - 0.75, 0.0D)
-      |    / element_at(m1, x.w1).c1
-      |  + ((0.75D * element_at(m1, x.w1).nl / element_at(m1, x.w1).c1)
-      |     * ((coalesce(element_at(mc, x.w2), 0) + 1.0D) / (nt + nu + 1.0D)))
-      |ELSE (coalesce(element_at(mc, x.w2), 0) + 1.0D) / (nt + nu + 1.0D)
-      |END""".stripMargin
-
-  def indomainPpl(s: SparkSession, d: String): DataFrame = {
-    val toks = Tables.documents(s, d)
-      .repartition(s.sparkContext.defaultParallelism)
-      .select(col("doc_id"), col("source"), split(col("text"), " ").as("tk"))
-    def bigrams(df: DataFrame): DataFrame = df
-      .filter(size(col("tk")) >= 2)
-      .select(col("doc_id"), col("source"), explode(expr(
-        "transform(sequence(1, size(tk) - 1), " +
-          "i -> struct(element_at(tk, i) AS w1, element_at(tk, i + 1) AS w2))")).as("b"))
-      .select(col("doc_id"), col("source"),
-        col("b.w1").as("w1"), col("b.w2").as("w2"))
-    val (bc, left, right, tot) = knTargetParts(toks)
     val pcont = (coalesce(col("nr"), lit(0L)) + lit(1.0)) /
       (col("nt") + col("nu") + lit(1.0))
     bigrams(toks)
@@ -1385,7 +1336,7 @@ object StatsOps {
         col("b.w1").as("w1"), col("b.w2").as("w2"))
     // ONE corpus pass at (source, bigram-TYPE) grain (r16, guide
     // §1.2/§2.3): the old shape exploded the corpus TWICE (once for
-    // the src0 model slice inside knTargetParts, once for scoring) and
+    // the src0 model slice, once for scoring) and
     // ran the 3 broadcast probes + ln() + decimal cast per bigram
     // INSTANCE (265k rows at sf0.1). p depends only on (w1, w2), so
     // instances collapse to types first — 18.2k (source,w1,w2) rows at
@@ -1626,26 +1577,6 @@ object StatsOps {
       |        / (ns.n_docs * na.n_all), 6) AS ks
       |FROM cum JOIN gcdf USING (len) JOIN ns ON ns.source = cum.source, na
       |GROUP BY cum.source, ns.n_docs, na.n_all ORDER BY cum.source""".stripMargin
-
-  /** The static reference CDF the streaming drift monitor broadcasts:
-    * the corpus's token-length distribution collapsed to ONE row of
-    * (len, cum_frac) structs — the dsirModel/indomainLmModel shape at
-    * length grain (bounded by the tokenizer's max-sequence policy).
-    * The unpartitioned cumsum runs at that bounded grain only. */
-  private[graft] def lengthRefCdf(s: SparkSession, d: String): DataFrame = {
-    val win = org.apache.spark.sql.expressions.Window
-    val c = Tables.documents(s, d)
-      .select(size(split(col("text"), " ")).cast("long").as("len"))
-      .groupBy(col("len")).agg(count(lit(1)).as("cnt"))
-    val tot = c.agg(sum(col("cnt")).as("n"))
-    c.crossJoin(broadcast(tot))
-      .withColumn("cf", sum(col("cnt")).over(
-        win.orderBy(col("len")).rowsBetween(
-          org.apache.spark.sql.expressions.Window.unboundedPreceding, 0))
-        .cast("double") / col("n"))
-      .groupBy()
-      .agg(sort_array(collect_list(struct(col("len"), col("cf")))).as("ref"))
-  }
 
   /** q185: k-ANONYMITY release gate — the census/privacy suppression
     * rule applied to the event log before an aggregate leaves the

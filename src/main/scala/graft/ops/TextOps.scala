@@ -315,19 +315,18 @@ object TextOps {
       .filter(col("n_occur") >= 2)
       .orderBy(col("chunk_hash"))
 
-  /** The CDC boundary expressions, shared verbatim by the batch chunk
-    * table and the streaming ingest gate (all stateless — streaming-
-    * safe). Bind order: `t` (token array) → `v` → `c` → `st`/`en`. */
-  private[graft] val cdcTokvalExpr =
+  /** The CDC boundary expressions of the chunk table (all stateless).
+    * Bind order: `t` (token array) → `v` → `c` → `st`/`en`. */
+  private val cdcTokvalExpr =
     "transform(t, x -> CAST(ascii(x) AS BIGINT)*131 + length(x))"
-  private[graft] val cdcCutsExpr =
+  private val cdcCutsExpr =
     "CASE WHEN size(t) >= 5 THEN filter(sequence(3, size(t) - 2), " +
       "i -> (element_at(v, i-2)*29791 + element_at(v, i-1)*961 + " +
       "element_at(v, i)*31 + element_at(v, i+1)) % 8 = 0) " +
       "ELSE CAST(array() AS ARRAY<INT>) END"
-  private[graft] val cdcStartsExpr = "concat(array(0), transform(c, x -> x + 1))"
-  private[graft] val cdcEndsExpr = "concat(c, array(size(t) - 1))"
-  private[graft] val cdcChunkTextsExpr =
+  private val cdcStartsExpr = "concat(array(0), transform(c, x -> x + 1))"
+  private val cdcEndsExpr = "concat(c, array(size(t) - 1))"
+  private val cdcChunkTextsExpr =
     "transform(sequence(1, size(st)), j -> array_join(slice(t, " +
       "element_at(st, j) + 1, element_at(en, j) - element_at(st, j) + 1), ' '))"
 
@@ -1955,16 +1954,6 @@ object TextOps {
        |WHERE CAST(i.inter AS DOUBLE) / (sa.n + sb.n - i.inter) >= 0.5
        |ORDER BY doc_a, doc_b""".stripMargin
 
-  /** The q105 signature frame (doc_id, b0..b3), one row per distinct
-    * text. The majority vote is 64 doc-local array scans — built once,
-    * memoized, every reference a checkpoint scan (both band-join sides
-    * read it). Checkpoint scans carry no stats → the self-join pins
-    * its strategy (the checkpoint-plans-lose-stats rule). Exposed
-    * (package-private) so SimhashJoinSpec can obtain the frame whether
-    * or not the memo is enabled (SPARK_GRAFT_MEMO=false rebuilds). */
-  private[graft] def simhashSignatures(s: SparkSession, d: String): DataFrame =
-    simhashSignaturesAt(s, d, 4)
-
   /** Band widths for an nBands split of the 64 signature bits: the
     * first (64 mod nBands) bands take the ceiling width (e.g. 6 bands
     * → 11,11,11,11,10,10). Shared by the builder, the join, and the
@@ -1972,17 +1961,8 @@ object TextOps {
   private[graft] def simhashWidths(nBands: Int): Seq[Int] =
     Seq.tabulate(nBands)(i => 64 / nBands + (if (i < 64 % nBands) 1 else 0))
 
-  /** The parametric signature frame (doc_id, b0..b{nBands−1}), one
-    * row per distinct text. Band b's bit j is GLOBAL signature bit
-    * (offset_b + j) — md5 hex digit (t div 4 + 1), bit (t mod 4) —
-    * so every nBands split encodes the SAME 64-bit Charikar
-    * signature, only partitioned differently; total Hamming distance
-    * is layout-independent. nBands = 4 is the q105 instance. */
   /** The majority-vote band columns over an `hs` column (array of
-    * per-token md5 hex) — shared by the batch signature builder and
-    * the streaming ingest gate ([[graft.streaming.StreamingOps
-    * .nearDupGate]]), which computes the same bands per arriving row
-    * with zero state. */
+    * per-token md5 hex), as the signature builder computes them. */
   private[graft] def simhashBandExprs(nBands: Int): Seq[Column] = {
     // per-bit membership sets: bit k of a hex digit is set iff the
     // digit lies in bitSets(k)
@@ -2004,6 +1984,19 @@ object TextOps {
     }
   }
 
+  /** The parametric signature frame (doc_id, b0..b{nBands−1}), one
+    * row per distinct text. Band b's bit j is GLOBAL signature bit
+    * (offset_b + j) — md5 hex digit (t div 4 + 1), bit (t mod 4) —
+    * so every nBands split encodes the SAME 64-bit Charikar
+    * signature, only partitioned differently; total Hamming distance
+    * is layout-independent. nBands = 4 is the q105 instance.
+    *
+    * The majority vote is 64 doc-local array scans — built once,
+    * memoized, every reference a checkpoint scan (both band-join sides
+    * read it). Checkpoint scans carry no stats → the self-join pins
+    * its strategy (the checkpoint-plans-lose-stats rule). Exposed
+    * (package-private) so SimhashJoinSpec can obtain the frame whether
+    * or not the memo is enabled (SPARK_GRAFT_MEMO=false rebuilds). */
   private[graft] def simhashSignaturesAt(
       s: SparkSession, d: String, nBands: Int): DataFrame =
     graft.CheckpointMemo.getOrElseUpdate(s, d,
@@ -4186,8 +4179,7 @@ object TextOps {
     * per source. Viterbi runs once per DISTINCT word; the per-source
     * rollup joins the word-grain piece counts back broadcast. */
   /** (w, n_pieces) at distinct-clipped-word grain under the trained
-    * round-2 model — q168's join side, and the broadcast static side
-    * of the streaming fertility-drift monitor. */
+    * round-2 model — q168's join side. */
   private[graft] def unigramWordPieces(s: SparkSession, d: String): DataFrame = {
     import s.implicits._
     val model = unigramModel2(s, d)._2.collect()

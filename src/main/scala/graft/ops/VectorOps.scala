@@ -445,43 +445,9 @@ object VectorOps {
        |SELECT label, COUNT(*) AS n_pairs, ROUND(MAX(cos), 6) AS max_cos
        |FROM p WHERE cos > 0.3 GROUP BY label ORDER BY label""".stripMargin
 
-  /** IVF ANN (the other scale path besides LSH): k-means coarse
-    * quantizer, probe the nProbe nearest centroids, exact re-rank
-    * inside them — candidates drop to ~nProbe/k of the corpus. The
-    * 16×64 centroid model is driver-resident (it IS the index
-    * metadata); only the assignment and re-rank are distributed.
-    * Test-only (MLlib k-means seeds are engine-internal → no oracle;
-    * kept out of the bench set to keep bench fit-free). */
-  def annIvf(s: SparkSession, d: String, k: Int = 16, nProbe: Int = 2,
-      topK: Int = 5): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.linalg.{Vector, Vectors}
-    val toVec = udf((a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
-    val withF = Tables.embeddings(s, d).withColumn("features", toVec(col("embedding")))
-    val model = new KMeans().setK(k).setSeed(42).setMaxIter(5)
-      .setFeaturesCol("features").setPredictionCol("cluster").fit(withF)
-    val assigned = model.transform(withF)
-    val qrow = assigned.filter(col("vec_id") === 0)
-      .select(col("features"), col("embedding")).head()
-    val qvec = qrow.getAs[Vector]("features")
-    val probe = model.clusterCenters.zipWithIndex
-      .sortBy { case (c, _) => Vectors.sqdist(c, qvec) }
-      .take(nProbe).map(_._2)
-    val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
-      .select(col("embedding").as("qv"))
-    assigned.filter(col("cluster").isin(probe.map(Integer.valueOf): _*) && col("vec_id") =!= 0)
-      .crossJoin(broadcast(q))
-      .select(col("vec_id"),
-        round(cosineSimFast(col("embedding"), col("qv")), 6).as("cos_sim"),
-        col("cluster"))
-      .orderBy(col("cos_sim").desc, col("vec_id"))
-      .limit(topK)
-  }
-
-  /** B31 IVF with a DETERMINISTIC coarse quantizer — the graded,
-    * oracle-backed counterpart of [[annIvf]]. MLlib k-means seeds are
-    * engine-internal, so that variant can never hash-match a SQL
-    * oracle; this one trains the quantizer as the q67 per-label
+  /** B31 IVF with a DETERMINISTIC coarse quantizer. k-means seeds are
+    * engine-internal, so a k-means-trained index can never hash-match
+    * a SQL oracle; this one trains the quantizer as the q67 per-label
     * centroid aggregate (exact DECIMAL(28,8) sums → identical doubles
     * on both engines) and the whole IVF pipeline becomes replayable:
     * assign every vector to its nearest centroid by
@@ -608,30 +574,6 @@ object VectorOps {
        |      - CASE WHEN n_old > 0 THEN ROUND(sum_old / n_old, 6) END, 6) AS drift
        |FROM g ORDER BY cell""".stripMargin
 
-  /** TRAINED coarse quantizer — full-dimension k-means over the
-    * embeddings (MLlib, fixed seed), exposed in the SAME (label, cv,
-    * cnorm) shape as [[ivfCentroids]] so every downstream consumer
-    * (scoring, assignment, the serving-recall harness) is codebook-
-    * agnostic. Test-graded like [[pqCentsLearned]]: k-means
-    * initialization is engine-internal, so a learned index can never
-    * hash-match a SQL oracle — VectorServingSpec drives the identical
-    * harness with both quantizers and SCALING.md records the recall
-    * delta. The model is driver-resident index metadata (k centroid
-    * arrays); assignment and scoring distribute. */
-  def ivfCentroidsLearned(s: SparkSession, d: String, k: Int = 10): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.linalg.Vectors
-    val toVec = udf((a: Seq[Float]) => Vectors.dense(a.map(_.toDouble).toArray))
-    val withF = Tables.embeddings(s, d).withColumn("features", toVec(col("embedding")))
-    val model = new KMeans().setK(k).setSeed(42L).setMaxIter(20)
-      .setFeaturesCol("features").fit(withF)
-    import s.implicits._
-    model.clusterCenters.zipWithIndex
-      .map { case (c, i) => (i.toLong, c.toArray.toSeq) }.toSeq
-      .toDF("label", "cv")
-      .withColumn("cnorm", dotFast(col("cv"), col("cv")))
-  }
-
   /** Every (vector, cell) pair with its ||c||² − 2·e·c distance score
     * under an arbitrary (label, cv, cnorm) quantizer, the centroid
     * index broadcast. */
@@ -665,7 +607,7 @@ object VectorOps {
     * columns ride the frame untouched (kept in the signature so the
     * call sites document what they carry through the argmin). Used
     * where the scored frame exists anyway (ivfAssigned, the q152
-    * harness, pqAssignFrom); assignments that never need the scored
+    * harness, pqAssigned); assignments that never need the scored
     * frame use the shuffle-free [[argminMapOnly]] instead. */
   private def argminBy(df: DataFrame, keys: Seq[String],
       payload: Seq[String]): DataFrame = {
@@ -796,20 +738,6 @@ object VectorOps {
       Tables.embeddings(s, d).select(col("vec_id"), col("embedding")), cents)
       .select(col("vec_id"), col("embedding"), col("label"))
 
-  /** TRAINED quantizer, oracle-expressible (VERDICT_r14 #6): k-means
-    * with the one engine-internal degree of freedom — initialization —
-    * pinned to the label-proxy centroids, and a FIXED 2 Lloyd
-    * iterations. Returns the same (label, cv, cnorm) shape as
-    * [[ivfCentroids]]/[[ivfCentroidsLearned]], so the whole serving
-    * stack (scoring, assignment, the recall harness) can run on a
-    * LEARNED codebook whose training is itself under the hash gate —
-    * closing the gap where the only trained quantizer was
-    * driver-resident MLlib state gradable by spec alone. */
-  private[graft] def lloydCentroids(s: SparkSession, d: String): DataFrame = {
-    val c1 = lloydMeans(lloydAssign(s, d, ivfCentroids(s, d)))
-    lloydMeans(lloydAssign(s, d, c1))
-  }
-
   /** q208: the Lloyd TRAINING TRAJECTORY under the oracle — per cell:
     * membership after the first E-step (grades the init means),
     * membership after the second (grades the first M-step), and the
@@ -932,8 +860,7 @@ object VectorOps {
     * deterministic cells is the smallest breadth clearing mean
     * recall@10 ≥ 0.8 at every SF (measured 0.82/0.84/0.835 at
     * sf0.001/0.01/0.1); VectorServingSpec runs the same harness with
-    * the TRAINED k-means quantizer ([[ivfCentroidsLearned]]) and
-    * SCALING.md records what training buys at fixed breadth.
+    * the q208 Lloyd-trained codebook.
     *
     * Scale shape: the index is a broadcast at any corpus size,
     * assignment is one map-side cross + a skew-free argmin window, and
@@ -1607,8 +1534,8 @@ object VectorOps {
       | CAST(LENGTH(text) - LENGTH(REGEXP_REPLACE(text, '[a-m]', '', 'g')) AS INT) AS n_am_bytes
       |FROM documents ORDER BY doc_id""".stripMargin
 
-  /** Per-label centroids — the k-means/IVF training step (annIvf's
-    * coarse quantizer, computed as a query). posexplode turns the
+  /** Per-label centroids — the IVF training step (the q87 coarse
+    * quantizer, computed as a query). posexplode turns the
     * element-wise mean into one partial-aggregatable shuffle keyed on
     * (label, dim): 640 groups regardless of corpus size, so at 100 TB
     * the wire carries only num_labels × dims partial sums per task.
@@ -1719,68 +1646,24 @@ object VectorOps {
       .agg(expr("transform(array_sort(collect_list(struct(pos, c))), x -> x.c)").as("cv"))
       .withColumn("cnorm", dotFast(col("cv"), col("cv")))
 
-  /** Code assignment at (vec_id, m) grain over ANY codebook with the
-    * (label, m, cv, cnorm) shape: argmin over the codes of ‖v_m − c‖²
-    * (the ‖v_m‖² term is constant per (vec, m) and drops out of the
-    * argmin), ties broken on label. The graded path feeds [[pqCents]];
-    * the learned path feeds [[pqCentsLearned]] — same estimator,
-    * different training. */
-  private[graft] def pqAssignFrom(s: SparkSession, d: String,
-      cents: DataFrame): DataFrame =
-    argminBy(Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding"))
-      .crossJoin(broadcast(cents))
-      .select(col("vec_id"), col("m"), col("label"),
-        (col("cnorm") - lit(2.0) * dotFast(
-          slice(col("embedding"), col("m") * lit(8) + lit(1), lit(8)),
-          col("cv"))).as("score")),
-      Seq("vec_id", "m"), Seq.empty)
-      .select(col("vec_id"), col("m"), col("label").as("code"))
-
-  /** The graded assignment (label-derived codebook), memoized — q126
-    * pivots it and q127 joins it per query. */
+  /** The graded code assignment at (vec_id, m) grain under the
+    * label-derived codebook: argmin over the codes of ‖v_m − c‖² (the
+    * ‖v_m‖² term is constant per (vec, m) and drops out of the argmin),
+    * ties broken on label. Memoized — q126 pivots it and q127 joins it
+    * per query. */
   private[graft] def pqAssigned(s: SparkSession, d: String): DataFrame =
     graft.CheckpointMemo.getOrElseUpdate(s, d, "pq_codes") {
-      pqAssignFrom(s, d, pqCents(s, d)).localCheckpoint()
+      argminBy(Tables.embeddings(s, d)
+        .select(col("vec_id"), col("embedding"))
+        .crossJoin(broadcast(pqCents(s, d)))
+        .select(col("vec_id"), col("m"), col("label"),
+          (col("cnorm") - lit(2.0) * dotFast(
+            slice(col("embedding"), col("m") * lit(8) + lit(1), lit(8)),
+            col("cv"))).as("score")),
+        Seq("vec_id", "m"), Seq.empty)
+        .select(col("vec_id"), col("m"), col("label").as("code"))
+        .localCheckpoint()
     }
-
-  /** LEARNED PQ codebook — per-subspace k-means over the 8-dim slices
-    * (MLlib; the production training loop). Test-only like [[annIvf]]:
-    * k-means initialization is engine-internal, so a learned codebook
-    * can never hash-match a SQL oracle — the graded q126/q127/q134
-    * queries keep the deterministic label-derived codebook, and
-    * PqSpec runs the SAME ADC machinery over this one and reports the
-    * recall@10 delta (SCALING.md). The model is driver-resident index
-    * metadata (k·8 centroids per subspace); only assignment and
-    * scoring distribute. */
-  def pqCentsLearned(s: SparkSession, d: String, k: Int = 10): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.linalg.Vectors
-    val toVec = udf((a: Seq[Double]) => Vectors.dense(a.toArray))
-    val e = Tables.embeddings(s, d)
-    val centers = (0 until 8).flatMap { m =>
-      val sub = e.select(toVec(
-        slice(col("embedding"), m * 8 + 1, 8).cast("array<double>")).as("features"))
-      val model = new KMeans().setK(k).setSeed(42L + m).setMaxIter(10)
-        .setFeaturesCol("features").fit(sub)
-      model.clusterCenters.zipWithIndex.map { case (c, i) =>
-        (i, m, c.toArray.toSeq)
-      }
-    }
-    import s.implicits._
-    centers.toDF("label", "m", "cv")
-      .withColumn("cnorm", dotFast(col("cv"), col("cv")))
-  }
-
-  /** ADC top-k under an arbitrary codebook — the q127 estimator,
-    * parameterized by training. PqSpec drives it with both codebooks
-    * to measure what learned centroids buy in recall. */
-  def pqAdcTopkFrom(s: SparkSession, d: String, cents: DataFrame,
-      k: Int = 10): DataFrame =
-    adcEstimate(pqAssignFrom(s, d, cents).filter(col("vec_id") =!= 0),
-      adcLookupFrom(s, d, cents))
-      .orderBy(col("est_dist"), col("vec_id"))
-      .limit(k)
 
   /** q126: product-quantization encoding — 64 float32 dims compressed
     * to 8 sub-byte codes per vector (Jégou/Douze/Schmid, TPAMI'11),
@@ -1837,16 +1720,10 @@ object VectorOps {
   /** The per-query ADC lookup table: 80 rows of (m, code, part) where
     * part = ‖q_m − c_{code,m}‖² for query vector 0. Shared by q127
     * (whole-corpus scan) and q134 (LSH-candidate re-rank). */
-  private def adcLookup(s: SparkSession, d: String): DataFrame =
-    adcLookupFrom(s, d, pqCents(s, d))
-
-  /** The lookup-table build over an arbitrary codebook (the learned
-    * variant reuses it verbatim). */
-  private def adcLookupFrom(s: SparkSession, d: String,
-      cents: DataFrame): DataFrame = {
+  private def adcLookup(s: SparkSession, d: String): DataFrame = {
     val q = Tables.embeddings(s, d).filter(col("vec_id") === 0)
       .select(col("embedding").as("qv"))
-    cents.crossJoin(broadcast(q))
+    pqCents(s, d).crossJoin(broadcast(q))
       .select(col("m"), col("label").as("code"),
         (dotFast(slice(col("qv"), col("m") * lit(8) + lit(1), lit(8)),
           slice(col("qv"), col("m") * lit(8) + lit(1), lit(8)))

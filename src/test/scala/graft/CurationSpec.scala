@@ -300,13 +300,36 @@ class CurationSpec extends AnyFunSuite with LocalSparkSuite {
     assert(out.values.map(_._2).sum > 0)
   }
 
-  test("typed corpus boundary round-trips the tables") {
-    val docs = Tables.documentsTyped(spark, sfDir)
-    assert(docs.count() === 500)
-    val d0 = docs.filter(_.doc_id == 0L).head()
-    assert(d0.n_chars === d0.text.length) // typed fields line up with the schema
-    val emb = Tables.embeddingsTyped(spark, sfDir).head()
-    assert(emb.embedding.length === 64 && emb.label >= 0 && emb.label <= 9)
+  test("DSIR model keeps all 16 buckets; an unseen bucket scores the smoothed default") {
+    import spark.implicits._
+    val corpus = Seq(
+      (0L, "src0", "key agg key agg key scan"),
+      (1L, "src0", "key value key value key"),
+      (2L, "src1", "window stream window stream batch"),
+      (3L, "src2", "sort merge sort merge join")).toDF("doc_id", "source", "text")
+    val model = CurationOps.dsirModel(corpus, "src0").localCheckpoint()
+    // the model must carry ALL 16 hex buckets, not just the observed ones
+    val entries = model.select(expr("map_keys(m)")).head.getSeq[String](0)
+    assert(entries.sorted === "0123456789abcdef".map(_.toString))
+    // 'key key' hashes to bucket 5, which no fit-corpus bigram occupies
+    // (the covered set is {1,4,6,7,a,d,e,f}); through the q140 scoring
+    // fold it gets the smoothed default, not NULL. tt=9 target / rt=8
+    // raw bigram occurrences in the fit corpus:
+    // lr = ln((0+1)/(9+16)) - ln((0+1)/(8+16)) = ln(24/25)
+    val weights = Seq("key key", "key agg key value key", "window stream batch stream")
+      .toDF("text")
+      .withColumn("bks", graft.functions.GraftFunctions
+        .bigramBuckets(split(col("text"), " ")))
+      .crossJoin(broadcast(model))
+      .select(col("text"), CurationOps.dsirWeightExpr.as("w")).collect()
+      .map(r => r.getString(0) -> r.get(1)).toMap
+    assert(weights("key key") != null, "an unseen bucket must not NULL the weight")
+    val expected = BigDecimal(math.log(24.0 / 25.0))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    assert(weights("key key") === expected)
+    // a target-like doc scores positive, a raw-like one negative
+    assert(weights("key agg key value key").asInstanceOf[Double] > 0.0)
+    assert(weights("window stream batch stream").asInstanceOf[Double] < 0.0)
   }
 
   test("union-by-name aligns columns and nulls the missing one") {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.ingest.{MediaWikiXml, Sinks}
+import graft.ingest.MediaWikiXml
 
 /** MediaWiki XML ingest — every branch of FIXTURES.md §2. */
 class IngestSpec extends AnyFunSuite with LocalSparkSuite {
@@ -194,14 +194,6 @@ class IngestSpec extends AnyFunSuite with LocalSparkSuite {
     val latest = MediaWikiXml.latestRevisionPerPage(flat)
     assert(latest.count() === 8)
     assert(latest.filter(col("page_id") === 6).head().getAs[Long]("rev_id") === 107L)
-  }
-
-  test("A12 incremental import: anti join keeps only new revisions") {
-    val existing = flat.filter(col("rev_id") <= 105)
-    val incoming = flat
-    val fresh = Sinks.newRevisionsOnly(incoming, existing)
-    assert(fresh.select("rev_id").collect().map(_.getLong(0)).sorted.toSeq
-      === Seq(106L, 107L, 108L, 109L))
   }
 
   test("wikilink extraction: label/anchor stripped, case and underscores normalized") {

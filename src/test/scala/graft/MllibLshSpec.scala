@@ -31,15 +31,6 @@ class MllibLshSpec extends AnyFunSuite with LocalSparkSuite {
     assert(dists.min < dists.max)
   }
 
-  test("IVF ANN recall: probed top-5 overlaps brute-force top-10") {
-    val ivf = graft.ops.VectorOps.annIvf(spark, sfDir).collect()
-      .map(_.getAs[Long]("vec_id")).toSet
-    assert(ivf.size === 5)
-    val brute = graft.ops.VectorOps.topkSimilar(spark, sfDir).collect()
-      .map(_.getAs[Long]("vec_id")).toSet
-    assert((ivf intersect brute).nonEmpty)
-  }
-
   test("deterministic IVF (q87) recall: probed top-5 overlaps brute-force top-10") {
     val ivf = graft.ops.VectorOps.annIvfCells(spark, sfDir).collect()
       .map(_.getAs[Long]("vec_id")).toSet

@@ -135,30 +135,6 @@ class MultimodalSpec extends AnyFunSuite with LocalSparkSuite {
     assert(a.toSeq === b.toSeq)
   }
 
-  test("frame sampling bounds output per asset") {
-    val frames = MultimodalOps.sampleFrames(assets)
-    val maxPerAsset = frames.groupBy("asset_id").count()
-      .agg(max("count")).head().getLong(0)
-    assert(maxPerAsset <= 8)
-    assert(frames.filter(length(col("frame_bytes")) > 16).count() === 0)
-  }
-
-  test("resize decimates every payload to a bounded fixed width") {
-    val resized = MultimodalOps.resize(assets, target = 32).collect()
-    assert(resized.nonEmpty)
-    resized.foreach { case (_, bytes) => assert(bytes.length <= 32) }
-    // deterministic: same input → same bytes
-    val again = MultimodalOps.resize(assets, target = 32).collect()
-    assert(resized.map(_._2.toSeq).toSeq === again.map(_._2.toSeq).toSeq)
-  }
-
-  test("resize never fabricates bytes for an empty payload") {
-    import spark.implicits._
-    val empty = Seq(MultimodalOps.Asset(1L, "image", Array.empty[Byte], 64, 16000)).toDS()
-    val out = MultimodalOps.resize(empty, target = 32).collect()
-    assert(out.head._2.isEmpty)
-  }
-
   // ---- WAV/PCM audio tier --------------------------------------------
 
   /** Test-side RIFF/WAVE writer (the JDK ships javax.sound but the

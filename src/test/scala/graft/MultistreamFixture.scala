@@ -3,6 +3,7 @@ package graft
 import java.nio.file.{Files, Path, Paths}
 
 import org.apache.commons.compress.compressors.bzip2.BZip2CompressorOutputStream
+import org.apache.spark.sql.SparkSession
 
 import graft.ingest.Multistream
 
@@ -20,7 +21,16 @@ object MultistreamFixture {
     bos.toByteArray
   }
 
-  val pages: Seq[String] = Multistream.splitPages(dumpXml).toSeq
+  /** The top-level `<page>…</page>` elements of a whole XML string. */
+  def splitPages(xml: String): Iterator[String] =
+    Multistream.splitPagesStream(new java.io.StringReader(xml))
+
+  /** The sorted distinct stream offsets an index lists, collected on the
+    * driver (the ingest path itself maps over the RDD). */
+  def streamOffsets(spark: SparkSession, indexPath: String): Seq[Long] =
+    Multistream.streamOffsetsRDD(spark, indexPath, 1).collect().sorted.toSeq
+
+  val pages: Seq[String] = splitPages(dumpXml).toSeq
 
   /** Build the public multistream layout from the minidump: stream 0 =
     * header+siteinfo, then `perStream`-page streams, then the footer

@@ -13,7 +13,7 @@ import graft.ingest.{MediaWikiXml, Multistream}
   * the single-stream XML-source path. */
 class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
 
-  import MultistreamFixture.{pages, writeFixture}
+  import MultistreamFixture.{pages, splitPages, streamOffsets, writeFixture}
 
   test("index parses offset:page_id:title, title colons intact") {
     val dir = Files.createTempDirectory("msidx")
@@ -29,7 +29,7 @@ class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
   test("each index offset decodes exactly its own stream and stops at its end") {
     val dir = Files.createTempDirectory("msstream")
     val (dump, index) = writeFixture(dir, 3)
-    val offsets = Multistream.streamOffsets(spark, index)
+    val offsets = streamOffsets(spark, index)
     val conf = spark.sparkContext.hadoopConfiguration
     // 8 pages / 3 per stream: the decoder at each offset yields that
     // stream's pages and none of the next stream's
@@ -82,7 +82,7 @@ class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
   test("stream count drives parallelism: one task per stream") {
     val dir = Files.createTempDirectory("mspar")
     val (dump, index) = writeFixture(dir, 2) // 4 data streams
-    assert(Multistream.streamOffsets(spark, index).size === 4)
+    assert(streamOffsets(spark, index).size === 4)
     // the deal spreads the 4 distinct offsets over 4 decode tasks
     val perTask = Multistream.streamOffsetsRDD(spark, index, 16).glom().collect()
     assert(perTask.map(_.length).sorted.reverse.take(5).toSeq === Seq(1, 1, 1, 1, 0))
@@ -107,9 +107,9 @@ class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
 
   test("splitPages: exact top-level page extraction") {
     val s = "<page><title>A</title></page>junk<page><title>B</title></page>"
-    assert(Multistream.splitPages(s).toSeq ===
+    assert(splitPages(s).toSeq ===
       Seq("<page><title>A</title></page>", "<page><title>B</title></page>"))
-    assert(Multistream.splitPages("no pages here").isEmpty)
+    assert(splitPages("no pages here").isEmpty)
   }
 
   /** Bounded-memory splitter (VERDICT_r12 #7): a many-page stream must
@@ -152,7 +152,7 @@ class MultistreamSpec extends AnyFunSuite with LocalSparkSuite {
         s"splitter read ${readChars - emitted} chars ahead of emission (budget $budget)")
     }
     assert(got.toSeq === pages, "streamed frames must equal the page list")
-    assert(got.toSeq === Multistream.splitPages(whole).toSeq,
+    assert(got.toSeq === splitPages(whole).toSeq,
       "streamed splitter must agree with the whole-string splitter")
   }
 }

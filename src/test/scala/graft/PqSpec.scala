@@ -108,46 +108,6 @@ class PqSpec extends AnyFunSuite with LocalSparkSuite {
     // invent distances)
   }
 
-  // exact squared-L2 top-k of query 0 over the corpus — the gold
-  // standard both codebooks' ADC estimates approximate
-  private def exactTopK(k: Int): Seq[Long] = {
-    val vecs = Tables.embeddings(spark, sfDir)
-      .select(col("vec_id"), col("embedding")).collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).map(_.toDouble)).toMap
-    val qv = vecs(0L)
-    vecs.toSeq.collect { case (id, v) if id != 0L =>
-      val d = (0 until 64).map(i => (v(i) - qv(i)) * (v(i) - qv(i))).sum
-      (d, id)
-    }.sorted.take(k).map(_._2)
-  }
-
-  test("learned k-means codebook drives the SAME graded ADC estimator; recall@10 recorded") {
-    val gold = exactTopK(10).toSet
-    val labelTop = graft.ops.VectorOps
-      .pqAdcTopkFrom(spark, sfDir, graft.ops.VectorOps.pqCents(spark, sfDir))
-      .collect().map(_.getLong(0))
-    // the generic path over the graded codebook IS the graded query
-    val graded = graft.ops.VectorOps.pqAdcTopk(spark, sfDir)
-      .collect().map(_.getLong(0))
-    assert(labelTop.toSeq === graded.toSeq)
-    val learnedCents = graft.ops.VectorOps.pqCentsLearned(spark, sfDir)
-    // shape contract: same (label, m, cv[8], cnorm) schema, 8 subspaces
-    val cc = learnedCents.collect()
-    assert(cc.map(_.getInt(cc.head.fieldIndex("m"))).distinct.sorted.toSeq === (0 until 8))
-    assert(cc.forall(_.getSeq[Double](cc.head.fieldIndex("cv")).length === 8))
-    val learnedTop = graft.ops.VectorOps
-      .pqAdcTopkFrom(spark, sfDir, learnedCents)
-      .collect().map(_.getLong(0))
-    val rLabel = labelTop.count(gold).toDouble / 10
-    val rLearned = learnedTop.count(gold).toDouble / 10
-    info(f"recall@10 label-derived codebook = $rLabel%.2f, learned k-means = $rLearned%.2f")
-    // k-means minimizes subspace quantization error, so the learned
-    // codebook must be at least competitive with the label stand-in
-    assert(rLearned >= rLabel,
-      s"learned codebook recall $rLearned < label codebook $rLabel")
-    assert(rLearned > 0.0)
-  }
-
   test("q137 semantic dedup = in-memory union-find over the same cosine pairs") {
     val rows = Tables.embeddings(spark, sfDir).filter(col("vec_id") < 300)
       .select(col("vec_id"), col("label"), col("embedding")).collect()

@@ -13,7 +13,7 @@ class SimhashJoinSpec extends AnyFunSuite with LocalSparkSuite {
   // the exact signature frame the operator joins on — via the same
   // builder, so the spec holds whether the memo is enabled (checkpoint
   // reuse) or disabled (SPARK_GRAFT_MEMO=false rebuilds it here)
-  private def signatures = graft.ops.TextOps.simhashSignatures(spark, sfDir)
+  private def signatures = graft.ops.TextOps.simhashSignaturesAt(spark, sfDir, 4)
 
   test("band join = brute-force all-pairs Hamming scan over the signatures") {
     val sig = signatures

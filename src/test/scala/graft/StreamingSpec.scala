@@ -7,38 +7,13 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.streaming.StreamingOps
-import graft.streaming.StreamingOps.Ev
+import graft.StreamingSpec.Ev
 
-/** B38/B41/B42 streaming semantics on MemoryStream (SURVEY.md §5.5). */
+/** B40/B41 streaming semantics on MemoryStream and file streams
+  * (SURVEY.md §5.5). */
 class StreamingSpec extends AnyFunSuite with LocalSparkSuite {
 
   private def ts(s: String) = Timestamp.valueOf(s)
-
-  test("B41 watermarked tumbling window emits closed windows, drops late rows") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val q = StreamingOps.tumblingCounts(in.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("tumble").start()
-    try {
-      in.addData(
-        Ev(1, ts("2024-01-01 10:05:00"), 1, "view", 1.0),
-        Ev(2, ts("2024-01-01 10:20:00"), 1, "view", 1.0))
-      q.processAllAvailable()
-      // advance watermark far past the 10:00 window
-      in.addData(Ev(3, ts("2024-01-01 13:00:00"), 1, "click", 1.0))
-      q.processAllAvailable()
-      // a late event for the already-closed 10:00 window must be dropped
-      in.addData(Ev(4, ts("2024-01-01 10:40:00"), 1, "view", 1.0))
-      q.processAllAvailable()
-      in.addData(Ev(5, ts("2024-01-01 15:00:00"), 1, "view", 1.0))
-      q.processAllAvailable()
-      val out = spark.table("tumble")
-        .filter(col("wstart") === ts("2024-01-01 10:00:00")).collect()
-      assert(out.length === 1)
-      assert(out.head.getAs[Long]("n") === 2) // late row 4 not counted
-    } finally q.stop()
-  }
 
   test("q198-streaming: hourly concurrency nets match the batch deltas, late endpoints dropped") {
     import spark.implicits._
@@ -100,128 +75,6 @@ class StreamingSpec extends AnyFunSuite with LocalSparkSuite {
       val first = rows.minBy(_.getAs[java.sql.Timestamp]("start").getTime)
       assert(first.getAs[Long]("n") === 2) // events 1+2 merged into one session
       assert(first.getAs[java.sql.Timestamp]("end") === ts("2024-01-01 10:40:00"))
-    } finally q.stop()
-  }
-
-  test("B42 dropDuplicatesWithinWatermark dedups the natural key") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val q = StreamingOps.dedupEvents(in.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("dedup").start()
-    try {
-      in.addData(
-        Ev(10, ts("2024-01-01 10:00:00"), 1, "view", 1.0),
-        Ev(10, ts("2024-01-01 10:00:30"), 1, "view", 1.0), // dup key
-        Ev(11, ts("2024-01-01 10:01:00"), 2, "click", 2.0))
-      q.processAllAvailable()
-      in.addData(Ev(10, ts("2024-01-01 10:02:00"), 1, "view", 1.0)) // dup again
-      q.processAllAvailable()
-      val ids = spark.table("dedup").select("event_id").collect().map(_.getLong(0))
-      assert(ids.sorted.toSeq === Seq(10L, 11L))
-    } finally q.stop()
-  }
-
-  test("streaming heavy-hitter windows: MG sketch state per closed window, late words dropped") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.heavyHitterWindows(in.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("hhwin").start()
-    try {
-      // window 10:00-10:05: "spark" dominates (8 of 14 words)
-      in.addData(
-        StreamingOps.Doc(1, ts("2024-01-01 10:01:00"),
-          "spark spark spark spark scala flink trino"),
-        StreamingOps.Doc(2, ts("2024-01-01 10:03:00"),
-          "spark spark spark spark duck goose heron"))
-      q.processAllAvailable()
-      in.addData(StreamingOps.Doc(3, ts("2024-01-01 13:00:00"), "tail data")) // close it
-      q.processAllAvailable()
-      val rows = spark.table("hhwin")
-        .filter(col("wstart") === ts("2024-01-01 10:00:00")).collect()
-      assert(rows.length === 1)
-      assert(rows.head.getAs[Long]("n_words") === 14)
-      val cands = rows.head.getSeq[String](1)
-      assert(cands.contains("spark"), s"dominant word lost from $cands")
-      assert(cands.size <= 15)
-    } finally q.stop()
-  }
-
-  test("streaming near-dup gate: first doc per LSH band wins, short docs pass on exact hash") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.nearDupGate(in.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("ndgate").start()
-    try {
-      val base = "the quick brown fox jumps over the lazy dog again and again"
-      in.addData(
-        StreamingOps.Doc(1, ts("2024-01-01 10:00:00"), base),
-        // identical text -> identical signature -> same band: dropped
-        StreamingOps.Doc(2, ts("2024-01-01 10:00:10"), base),
-        // unrelated text -> different band: kept
-        StreamingOps.Doc(3, ts("2024-01-01 10:00:20"),
-          "completely different words about spark physical plans here"),
-        // too short to shingle twice -> exact-hash band, dup dropped
-        StreamingOps.Doc(4, ts("2024-01-01 10:00:30"), "hi there"),
-        StreamingOps.Doc(5, ts("2024-01-01 10:00:40"), "hi there"))
-      q.processAllAvailable()
-      val kept = spark.table("ndgate").select("doc_id").collect().map(_.getLong(0)).sorted
-      assert(kept.toSeq === Seq(1L, 3L, 4L))
-    } finally q.stop()
-  }
-
-  test("chunk-dedup gate keeps only a chunk's first occurrence across docs") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.chunkDedupGate(in.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("cdgate").start()
-    try {
-      // 40 tokens -> two chunks (32 + 8); doc 2 repeats doc 1's text
-      // exactly, so BOTH its chunks drop; doc 3 is fresh and survives
-      val words = (1 to 40).map(i => s"w$i").mkString(" ")
-      in.addData(
-        StreamingOps.Doc(1, ts("2024-01-01 10:00:00"), words),
-        StreamingOps.Doc(2, ts("2024-01-01 10:00:10"), words),
-        StreamingOps.Doc(3, ts("2024-01-01 10:00:20"), "novel text entirely"))
-      q.processAllAvailable()
-      val kept = spark.table("cdgate").collect()
-        .map(r => (r.getLong(0), r.getInt(1))).sorted
-      assert(kept.toSeq === Seq((1L, 0), (1L, 1), (3L, 0)))
-    } finally q.stop()
-  }
-
-  test("CDC-dedup gate: an edited re-crawl drops every chunk outside the edit") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.cdcDedupGate(in.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("cdcgate").start()
-    try {
-      val words = (0 until 64).map(i => s"w${(i * 37) % 23}x${i % 7}").mkString(" ")
-      in.addData(
-        StreamingOps.Doc(1, ts("2024-01-01 10:00:00"), words),
-        // a PREFIX edit of doc 1: content-defined boundaries re-align,
-        // so the shared tail chunks are dropped as already-seen — a
-        // fixed-stride gate would keep them all (every chunk shifts)
-        StreamingOps.Doc(2, ts("2024-01-01 10:00:10"), "zq9 " + words),
-        // exact repeat: everything drops
-        StreamingOps.Doc(3, ts("2024-01-01 10:00:20"), words))
-      q.processAllAvailable()
-      val kept = spark.table("cdcgate").collect()
-        .map(r => (r.getLong(0), r.getInt(1)))
-      val n1 = kept.count(_._1 == 1L)
-      val n2 = kept.count(_._1 == 2L)
-      assert(n1 > 0, "first doc's chunks all survive")
-      assert(n2 > 0, "the edit itself is novel and survives")
-      // doc 2 kept strictly fewer chunks than doc 1 emitted: the tail
-      // re-aligned and deduped against doc 1's horizon state
-      val batchChunks = graft.ops.TextOps.cdcChunkTable(
-        Seq((2L, "zq9 " + words)).toDF("doc_id", "text")).count()
-      assert(n2 < batchChunks, s"gate kept $n2 of $batchChunks chunks")
-      assert(!kept.exists(_._1 == 3L), "exact repeat fully dropped")
     } finally q.stop()
   }
 
@@ -295,71 +148,6 @@ class StreamingSpec extends AnyFunSuite with LocalSparkSuite {
     } finally q.stop()
   }
 
-  test("A11-streaming: foreachBatch appends each micro-batch to Derby") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val url = s"jdbc:derby:${java.nio.file.Files.createTempDirectory("graftsdb")}/stream;create=true"
-    val in = MemoryStream[Ev]
-    val q = StreamingOps.streamToJdbc(
-      in.toDF().select("event_id", "user_id", "event_type"), url, "events_sink")
-    try {
-      in.addData(Ev(1, ts("2024-01-01 10:00:00"), 1, "view", 1.0))
-      q.processAllAvailable()
-      assert(graft.ingest.Sinks.readJdbc(spark, url, "events_sink").count() === 1)
-      in.addData(Ev(2, ts("2024-01-01 10:01:00"), 1, "click", 1.0),
-        Ev(3, ts("2024-01-01 10:02:00"), 2, "view", 1.0))
-      q.processAllAvailable()
-      assert(graft.ingest.Sinks.readJdbc(spark, url, "events_sink").count() === 3)
-    } finally q.stop()
-  }
-
-  test("B42 flatMapGroupsWithState keeps running per-user counts") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val q = StreamingOps.runningUserCounts(in.toDS())
-      .writeStream.outputMode("update").format("memory").queryName("ucount").start()
-    try {
-      in.addData(Ev(1, ts("2024-01-01 10:00:00"), 7, "view", 1.0),
-        Ev(2, ts("2024-01-01 10:01:00"), 7, "view", 1.0))
-      q.processAllAvailable()
-      in.addData(Ev(3, ts("2024-01-01 10:02:00"), 7, "click", 1.0))
-      q.processAllAvailable()
-      val ns = spark.table("ucount").filter(col("user_id") === 7)
-        .select("n").collect().map(_.getLong(0))
-      assert(ns.max === 3L) // state carried across batches
-    } finally q.stop()
-  }
-
-  test("B42 transformWithState (Spark 4 arbitrary state) carries ValueState across batches") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val prev = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    val in = MemoryStream[Ev]
-    val q = StreamingOps.runningUserCountsTws(in.toDS())
-      .writeStream.outputMode("update").format("memory").queryName("twscount").start()
-    try {
-      in.addData(Ev(1, ts("2024-01-01 10:00:00"), 9, "view", 1.0),
-        Ev(2, ts("2024-01-01 10:01:00"), 9, "view", 1.0))
-      q.processAllAvailable()
-      in.addData(Ev(3, ts("2024-01-01 10:02:00"), 9, "click", 1.0),
-        Ev(4, ts("2024-01-01 10:03:00"), 5, "view", 1.0))
-      q.processAllAvailable()
-      val rows = spark.table("twscount").collect()
-        .map(r => (r.getLong(0), r.getLong(1)))
-      assert(rows.filter(_._1 == 9).map(_._2).max === 3L)
-      assert(rows.filter(_._1 == 5).map(_._2).max === 1L)
-    } finally {
-      q.stop()
-      prev match {
-        case Some(v) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", v)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
-    }
-  }
-
   test("B41 stream-stream interval join attributes clicks within the window only") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -415,307 +203,9 @@ class StreamingSpec extends AnyFunSuite with LocalSparkSuite {
       assert(rows.contains((101L, None)), "watermark-closed impression missing its null row")
     } finally q.stop()
   }
+}
 
-  test("stream-static near-dup gate flags simhash band hits, passes unrelated docs") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // the corpus text and doc 1 are identical -> identical signature,
-    // all four bands hit; doc 2 shares no content -> its bands miss
-    // (a 16-bit collision is ~4/65536 and deterministic if it ever
-    // happened, so the fixture is stable)
-    val corpusText = "the quick brown fox jumps over the lazy dog near the river bank today"
-    val corpus = Seq(corpusText).toDF("text")
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.nearDupGate(in.toDF(), corpus)
-      .writeStream.outputMode("append").format("memory").queryName("neargate").start()
-    try {
-      in.addData(
-        StreamingOps.Doc(1, ts("2024-01-01 10:00:00"), corpusText),
-        StreamingOps.Doc(2, ts("2024-01-01 10:00:10"),
-          "completely different words about spark physical plans and shuffles instead"))
-      q.processAllAvailable()
-      val flags = spark.table("neargate").select("doc_id", "near_candidate")
-        .collect().map(r => r.getLong(0) -> r.getBoolean(1)).toMap
-      assert(flags === Map(1L -> true, 2L -> false))
-    } finally q.stop()
-  }
-
-  test("stream-static decontamination gate drops benchmark texts, keeps the rest") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val benchmark = Seq("eval question one", "eval question two").toDF("text")
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.decontaminationGate(in.toDF(), benchmark)
-      .writeStream.outputMode("append").format("memory").queryName("decon").start()
-    try {
-      in.addData(
-        StreamingOps.Doc(1, ts("2024-01-01 10:00:00"), "eval question one"),
-        StreamingOps.Doc(2, ts("2024-01-01 10:00:10"), "a perfectly clean doc"),
-        StreamingOps.Doc(3, ts("2024-01-01 10:00:20"), "eval question two"),
-        StreamingOps.Doc(4, ts("2024-01-01 10:00:30"), "another clean one"))
-      q.processAllAvailable()
-      val kept = spark.table("decon").select("doc_id")
-        .collect().map(_.getLong(0)).sorted
-      assert(kept.toSeq === Seq(2L, 4L))
-    } finally q.stop()
-  }
-
-  test("stream-static DSIR gate scores arrivals with the batch model, zero state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    // model fit on a static corpus where 'key'-heavy docs are the target
-    val corpus = Seq(
-      (0L, "src0", "key agg key agg key scan"),
-      (1L, "src0", "key value key value key"),
-      (2L, "src1", "window stream window stream batch"),
-      (3L, "src2", "sort merge sort merge join")).toDF("doc_id", "source", "text")
-    val model = graft.ops.CurationOps.dsirModel(corpus, "src0").localCheckpoint()
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.dsirGate(in.toDF(), model, 0.0)
-      .writeStream.outputMode("append").format("memory").queryName("dsir").start()
-    try {
-      in.addData(
-        StreamingOps.Doc(10, ts("2024-01-01 10:00:00"), "key agg key value key"),
-        StreamingOps.Doc(11, ts("2024-01-01 10:00:10"), "window stream batch stream"),
-        StreamingOps.Doc(12, ts("2024-01-01 10:00:20"), "solo"))
-      q.processAllAvailable()
-      val rows = spark.table("dsir")
-        .collect().map(r => r.getLong(0) -> ((r.getDouble(3), r.getBoolean(4)))).toMap
-      // target-like doc scores positive and passes; raw-like scores
-      // negative and is flagged out; a featureless doc scores 0
-      assert(rows(10L)._1 > 0.0 && rows(10L)._2)
-      assert(rows(11L)._1 < 0.0 && !rows(11L)._2)
-      assert(rows(12L)._1 === 0.0 && rows(12L)._2)
-      // the streaming weight equals the batch scorer's on the same text:
-      // score the stream docs through the batch fold directly
-      val batch = Seq((10L, "x", "key agg key value key"),
-        (11L, "x", "window stream batch stream")).toDF("doc_id", "source", "text")
-        .withColumn("bks", graft.functions.GraftFunctions
-          .bigramBuckets(split(col("text"), " ")))
-        .crossJoin(broadcast(model))
-        .select(col("doc_id"), graft.ops.CurationOps.dsirWeightExpr.as("w"))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(rows(10L)._1 === batch(10L))
-      assert(rows(11L)._1 === batch(11L))
-    } finally q.stop()
-  }
-
-  test("DSIR gate scores a bigram bucket absent from the fit corpus (smoothed, not NULL)") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val corpus = Seq(
-      (0L, "src0", "key agg key agg key scan"),
-      (1L, "src0", "key value key value key"),
-      (2L, "src1", "window stream window stream batch"),
-      (3L, "src2", "sort merge sort merge join")).toDF("doc_id", "source", "text")
-    val model = graft.ops.CurationOps.dsirModel(corpus, "src0").localCheckpoint()
-    // the model must carry ALL 16 hex buckets, not just the observed ones
-    val entries = model.select(expr("map_keys(m)")).head.getSeq[String](0)
-    assert(entries.sorted === "0123456789abcdef".map(_.toString))
-    // 'key key' hashes to bucket 5, which no fit-corpus bigram
-    // occupies (covered set is {1,4,6,7,a,d,e,f}); pre-fix this doc
-    // scored weight=NULL and silently fell out of the gate — now it
-    // gets the smoothed default ln((rt+16)/(tt+16)).
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.dsirGate(in.toDF(), model, -1.0)
-      .writeStream.outputMode("append").format("memory").queryName("dsir_unseen").start()
-    try {
-      in.addData(StreamingOps.Doc(20, ts("2024-01-01 10:00:00"), "key key"))
-      q.processAllAvailable()
-      val rows = spark.table("dsir_unseen")
-        .collect().map(r => r.getLong(0) -> ((r.getDouble(3), r.getBoolean(4)))).toMap
-      assert(rows.contains(20L), "unseen-bucket doc must not fall out of the gate")
-      // tt=9 target / rt=8 raw bigram occurrences in the fit corpus:
-      // smoothed lr = ln((0+1)/(9+16)) - ln((0+1)/(8+16)) = ln(24/25)
-      val expected = BigDecimal(math.log(24.0 / 25.0))
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(rows(20L)._1 === expected)
-      assert(rows(20L)._2, "weight above threshold must keep the doc")
-    } finally q.stop()
-  }
-
-  test("in-domain ppl gate scores arrivals against the broadcast KN model, zero state") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val model = graft.ops.StatsOps.indomainLmModel(spark, sfDir).localCheckpoint()
-    // two docs lifted verbatim from the corpus (one src0, one not) +
-    // a fully-unseen-history doc (the backoff path) + a 1-token doc
-    val corpus = Tables.documents(spark, sfDir)
-      .select("doc_id", "source", "text").collect()
-    val inDomain = corpus.find(_.getString(1) == "src0").get.getString(2)
-    val outDomain = corpus.find(_.getString(1) != "src0").get.getString(2)
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.indomainPplGate(in.toDF(), model, maxPpl = 30.0)
-      .writeStream.outputMode("append").format("memory").queryName("ppl_gate").start()
-    try {
-      in.addData(
-        StreamingOps.Doc(1, ts("2024-01-01 10:00:00"), inDomain),
-        StreamingOps.Doc(2, ts("2024-01-01 10:00:10"), outDomain),
-        StreamingOps.Doc(3, ts("2024-01-01 10:00:20"), "zzz yyy xxx"),
-        StreamingOps.Doc(4, ts("2024-01-01 10:00:30"), "solo"))
-      q.processAllAvailable()
-      val rows = spark.table("ppl_gate")
-        .collect().map(r => r.getLong(0) ->
-          ((r.getLong(3), r.getDouble(4), r.getBoolean(5)))).toMap
-      // streamed ppl agrees with the graded batch scorer at the
-      // ROUND(4) grain (the fold orders differ: plain-double vs the
-      // cross-engine exact-decimal route)
-      val batch = graft.ops.StatsOps.indomainPpl(spark, sfDir).collect()
-        .map(r => r.getLong(0) -> r.getDouble(3)).toMap
-      val idIn = corpus.find(_.getString(1) == "src0").get.getLong(0)
-      val idOut = corpus.find(_.getString(1) != "src0").get.getLong(0)
-      assert(math.abs(rows(1L)._2 - batch(idIn)) < 2e-4)
-      assert(math.abs(rows(2L)._2 - batch(idOut)) < 2e-4)
-      // in-domain text passes the ceiling; unseen-history text scores
-      // the smoothed-backoff perplexity (finite — never log 0) and
-      // fails it by a wide margin
-      assert(rows(1L)._3, s"in-domain doc should pass: ${rows(1L)}")
-      assert(rows(3L)._2 > 100.0 && !rows(3L)._3,
-        s"backoff doc should score high but finite: ${rows(3L)}")
-      assert(!rows(3L)._2.isNaN && !rows(3L)._2.isInfinite)
-      // featureless doc: ppl 0, kept
-      assert(rows(4L) === ((0L, 0.0, true)))
-    } finally q.stop()
-  }
-
-  test("length-drift monitor: per-window KS vs the static reference, drift flagged") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val ref = graft.ops.StatsOps.lengthRefCdf(spark, sfDir).localCheckpoint()
-    val corpusTexts = Tables.documents(spark, sfDir)
-      .select("text").collect().map(_.getString(0))
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.lengthDriftMonitor(in.toDF(), ref, threshold = 0.3)
-      .writeStream.outputMode("append").format("memory").queryName("lendrift").start()
-    try {
-      // window 1: corpus-shaped lengths (low drift); window 2: all
-      // 3-token docs (a truncating feed — high drift); window 3 only
-      // exists to close the first two via the watermark
-      corpusTexts.take(30).zipWithIndex.foreach { case (t, i) =>
-        in.addData(StreamingOps.Doc(i.toLong, ts("2024-01-01 10:00:00"), t))
-      }
-      (100 to 129).foreach(i =>
-        in.addData(StreamingOps.Doc(i.toLong, ts("2024-01-01 11:00:00"), "a b c")))
-      in.addData(StreamingOps.Doc(999, ts("2024-01-01 13:00:00"), "closer doc"))
-      q.processAllAvailable()
-      val rows = spark.table("lendrift").collect()
-        .map(r => r.getTimestamp(0).toString -> ((r.getLong(1), r.getDouble(2), r.getBoolean(3))))
-        .toMap
-      val w1 = rows("2024-01-01 10:00:00.0")
-      val w2 = rows("2024-01-01 11:00:00.0")
-      assert(w1._1 === 30L && w2._1 === 30L)
-      // brute-force KS for both windows on the reference grid
-      val lens = corpusTexts.map(_.split(" ", -1).length)
-      val n = lens.length.toDouble
-      val grid = lens.distinct.sorted
-      def ks(win: Seq[Int]): Double = {
-        val d = grid.map { l =>
-          math.abs(win.count(_ <= l).toDouble / win.size - lens.count(_ <= l) / n)
-        }.max
-        BigDecimal(d).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      }
-      assert(w1._2 === ks(corpusTexts.take(30).map(_.split(" ", -1).length)))
-      assert(w2._2 === ks(Seq.fill(30)(3)))
-      // the truncating feed drifts, the corpus-shaped window does not
-      assert(!w1._3, s"window 1 should not drift: $w1")
-      assert(w2._3 && w2._2 > 0.9, s"window 2 should drift hard: $w2")
-    } finally q.stop()
-  }
-
-  test("fertility-drift monitor: windowed tokens-per-word under the trained unigram model") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val wp = graft.ops.TextOps.unigramWordPieces(spark, sfDir).localCheckpoint()
-    val pieceOf = wp.collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val corpusTexts = Tables.documents(spark, sfDir)
-      .select("text").collect().map(_.getString(0))
-    val in = MemoryStream[StreamingOps.SrcDoc]
-    // baseline = the trained corpus's own fertility; margin 0.5 pieces/word
-    val base = {
-      val words = corpusTexts.flatMap(_.split(" ", -1)).filter(_.nonEmpty)
-        .map(_.take(graft.ops.TextOps.UniClip))
-      words.map(pieceOf).sum.toDouble / words.length
-    }
-    val q = StreamingOps.fertilityDriftMonitor(in.toDF(), wp, base, margin = 0.5)
-      .writeStream.outputMode("append").format("memory").queryName("fdrift").start()
-    try {
-      // window 1: corpus-shaped text (fertility ~ baseline); window 2:
-      // OOV gibberish (every word falls back to char-count pieces);
-      // window 3 closes the first two via the watermark
-      corpusTexts.take(20).zipWithIndex.foreach { case (t, i) =>
-        in.addData(StreamingOps.SrcDoc(i.toLong, ts("2024-01-01 10:00:00"), "s0", t))
-      }
-      (100 to 119).foreach(i =>
-        in.addData(StreamingOps.SrcDoc(i.toLong, ts("2024-01-01 11:00:00"), "s0",
-          "zqxjvvkw pfffrtq wmmzzyx")))
-      in.addData(StreamingOps.SrcDoc(999, ts("2024-01-01 13:00:00"), "s0", "closer"))
-      q.processAllAvailable()
-      val rows = spark.table("fdrift").collect()
-        .map(r => r.getTimestamp(0).toString ->
-          ((r.getLong(2), r.getLong(3), r.getDouble(4), r.getBoolean(5))))
-        .toMap
-      val w1 = rows("2024-01-01 10:00:00.0")
-      val w2 = rows("2024-01-01 11:00:00.0")
-      // window 1 recount: the batch formula over the same 20 docs
-      val words1 = corpusTexts.take(20).flatMap(_.split(" ", -1)).filter(_.nonEmpty)
-        .map(_.take(graft.ops.TextOps.UniClip))
-      val nt1 = words1.map(pieceOf).sum // all in-vocab: trained corpus words
-      assert(w1._1 === words1.length.toLong && w1._2 === nt1)
-      val f1 = BigDecimal(nt1.toDouble / words1.length)
-        .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-      assert(w1._3 === f1)
-      assert(!w1._4, s"corpus-shaped window must not drift: $w1")
-      // window 2: every word OOV -> char-count fallback (8+7+7 per doc)
-      assert(w2._1 === 60L && w2._2 === 20L * (8 + 7 + 7))
-      assert(w2._4, s"the OOV feed must flag drifted: $w2")
-    } finally q.stop()
-  }
-
-  test("contamination monitor: hourly clean/contaminated counts per closed window") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val benchmark = Seq("eval question one").toDF("text")
-    val in = MemoryStream[StreamingOps.Doc]
-    val q = StreamingOps.contaminationMonitor(in.toDF(), benchmark)
-      .writeStream.outputMode("append").format("memory").queryName("conmon").start()
-    try {
-      in.addData(
-        StreamingOps.Doc(1, ts("2024-01-01 10:05:00"), "eval question one"),
-        StreamingOps.Doc(2, ts("2024-01-01 10:10:00"), "clean doc a"),
-        StreamingOps.Doc(3, ts("2024-01-01 10:20:00"), "clean doc b"),
-        StreamingOps.Doc(4, ts("2024-01-01 10:40:00"), "eval question one"))
-      q.processAllAvailable()
-      in.addData(StreamingOps.Doc(5, ts("2024-01-01 13:00:00"), "tail")) // close 10:00
-      q.processAllAvailable()
-      val rows = spark.table("conmon")
-        .filter(col("wstart") === ts("2024-01-01 10:00:00")).collect()
-      assert(rows.length === 1)
-      assert(rows.head.getAs[Long]("contaminated_docs") === 2L)
-      assert(rows.head.getAs[Long]("clean_docs") === 2L)
-    } finally q.stop()
-  }
-
-  test("windowed streaming percentiles: sketch state per closed window, exact at small values") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val in = MemoryStream[Ev]
-    val q = StreamingOps.percentileWindows(in.toDF())
-      .writeStream.outputMode("append").format("memory").queryName("pctwin").start()
-    try {
-      // window 10:00-11:00: values 1.00..2.00 -> cents 100..200, all
-      // below 2^(m+1)=256 so the sketch is EXACT order statistics:
-      // rank(.5)=ceil(50.5)=51 -> 150, rank(.99)=ceil(99.99)=100 -> 199
-      in.addData((0 to 100).map(i =>
-        Ev(i.toLong, ts("2024-01-01 10:30:00"), 1L, "e", 1.0 + i / 100.0)): _*)
-      q.processAllAvailable()
-      in.addData(Ev(999, ts("2024-01-01 13:00:00"), 1L, "e", 5.0)) // close it
-      q.processAllAvailable()
-      val rows = spark.table("pctwin")
-        .filter(col("wstart") === ts("2024-01-01 10:00:00")).collect()
-      assert(rows.length === 1)
-      assert(rows.head.getAs[Long]("n") === 101L)
-      assert(rows.head.getAs[Long]("p50_cents") === 150L)
-      assert(rows.head.getAs[Long]("p99_cents") === 199L)
-    } finally q.stop()
-  }
+object StreamingSpec {
+  final case class Ev(event_id: Long, ts: java.sql.Timestamp, user_id: Long,
+      event_type: String, value: Double)
 }

@@ -68,7 +68,7 @@ object PlanDump {
       "q143_substring_rewrite" -> "B83 substring rewrite: q139's gram exchange + one min-aggregate on the same key, islands doc-partitioned, reassembly a map-only filter against the doc's own interval array",
       "q144_lsh_operating_point" -> "B84 LSH eval: ground truth and candidates both read the memoized rep-grain shingle frame (Scan ExistingRDD), three 1-row count aggregates broadcast into the final row",
       "q145_dsir_select" -> "B85 DSIR selection: q140's broadcast-model plan + one source-partitioned top-k window over doc-grain rows",
-      "q147_kn_bigram_lm" -> "B86 Kneser-Ney LM: one vocab-bounded bigram aggregate, marginals as aggregates OF it, type total a 1-row broadcast, probability map-only",
+      "q147_kn_bigram_lm" -> "B86 Kneser-Ney LM: one vocab-bounded bigram aggregate checkpointed per call (Scan ExistingRDD), marginals as w1- and w2-keyed windows over it (no join-back), type total a 1-row broadcast, probability map-only",
       "q148_mmr_diverse" -> "B87 MMR: candidate frame checkpointed once (Scan ExistingRDD), each round a map-only score + TakeOrdered(1), selected set a 1-row broadcast",
       "q149_split_leakage" -> "B89 split leakage: banded candidate generation shared with q34, two skinny shuffle-hash join-backs of (doc_id, split), 6-row aggregate",
       "q150_degenerate_runs" -> "B90 degenerate runs: ONE map-only struct-fold projection — no explode, no window, nothing leaves the row",

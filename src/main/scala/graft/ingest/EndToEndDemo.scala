@@ -135,7 +135,9 @@ object EndToEndDemo {
       curated.select("doc_id", "text", "lang", "source", "n_chars"),
       shardsDir, targetBytes = 1L << 16, codec = "gzip")
     val nShards = manifest.count()
-    val diffs = CorpusExport.verifyExport(spark, shardsDir).count()
+    // the diff is a local frame: collecting it runs no job,
+    // where count() would plan a two-stage aggregate over it
+    val diffs = CorpusExport.verifyExport(spark, shardsDir).collect().length
 
     val secs = (System.nanoTime() - t0) / 1e9
     // ASCII one-liner, same artifact discipline as Bench

@@ -54,14 +54,15 @@ object CurationOps {
     * sort_array + interpreted `aggregate` run-max fold computed the
     * same integers 5× slower — invisible behind `.count()` (column
     * pruning skips the fractions) but paid by every consumer that
-    * reads them, e.g. the q79 quality gate. The repartition fans the
+    * reads them, e.g. the q79 quality gate, which computes the same
+    * two fractions from the same triple. The repartition fans the
     * single-row-group testdata scan across cores before the per-row
     * compute (a many-file table is already parallel). Both ratios are
     * single IEEE divisions of exact integers — deterministic
     * cross-engine without rounding. Docs with <2 tokens have no bigrams
     * and are excluded (the oracle's unnest of an empty slide list drops
     * them identically). */
-  private[ops] def repetitionCore(s: SparkSession, d: String): DataFrame =
+  def repetitionStats(s: SparkSession, d: String): DataFrame =
     Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism)
       .select(col("doc_id"), split(col("text"), " ").as("t"))
@@ -70,9 +71,7 @@ object CurationOps {
       .select(col("doc_id"), col("bs")(0).as("n_tokens"),
         ((col("bs")(0) - col("bs")(1)).cast("double") / col("bs")(0)).as("dup_word_frac"),
         (col("bs")(2).cast("double") / (col("bs")(0) - 1)).as("top_bigram_frac"))
-
-  def repetitionStats(s: SparkSession, d: String): DataFrame =
-    repetitionCore(s, d).orderBy(col("doc_id"))
+      .orderBy(col("doc_id"))
 
   private val repetitionStatsSql =
     """WITH t AS (SELECT doc_id, string_split(text,' ') AS t FROM documents),
@@ -169,34 +168,53 @@ object CurationOps {
     *   was quality-filtered still keeps one copy) → reproducible hash
     *   sample.
     *
-    * Returns the curated corpus slice. Each stage is a semi/anti join
-    * against a per-doc key set — broadcast-sized here, shuffle-keyed at
-    * 100 TB — and the whole chain is one lazy plan except the
-    * clustering fixpoint. */
+    * Returns the curated corpus slice. Scale: documents is scanned
+    * once. One projection yields the narrow output columns, the
+    * content hash and the repetition gate, so `text` never shuffles;
+    * the exact-dedup election is a window keyed on the 32-byte hash,
+    * and the near-dup stage is a shuffle-hash left join against the
+    * cluster labels plus a cluster-keyed window. A warm call at
+    * sf0.001 runs 8 jobs and compiles 38 generated classes in a fresh
+    * cache (QueryJobBudgetSpec pins both). The whole chain is one lazy
+    * plan except the clustering fixpoint. */
   def curateCorpus(s: SparkSession, d: String, sampleHex: String = "0123456789abcdef")
       : DataFrame = {
     require(sampleHex.nonEmpty && sampleHex.forall("0123456789abcdef".contains(_)),
       s"sampleHex must be non-empty lowercase hex chars, got '$sampleHex'")
-    val docs = Tables.documents(s, d)
-    val lowQuality = repetitionCore(s, d)
-      .filter(col("dup_word_frac") > 0.95 || col("top_bigram_frac") > 0.5)
-      .select(col("doc_id"))
-    val exactSurvivors = TextOps.exactDedupCore(s, d).select(col("doc_id"))
-    val preDedup = docs
-      .join(lowQuality, Seq("doc_id"), "left_anti")
-      .join(exactSurvivors, Seq("doc_id"), "left_semi")
-    // Near-dup dedup over survivors in ONE pass over preDedup (an
-    // earlier two-branch formulation — losers computed on one branch,
-    // anti-joined on the other — evaluated the repetition-gate and
-    // sha256 subtrees twice, doubling the query's cost): left-join the
-    // cluster labels and re-elect the representative per cluster AMONG
-    // THE DOCS STILL STANDING, so a cluster whose original rep was
-    // quality-filtered still keeps one copy. Unclustered docs window
-    // over their own doc_id — singleton partitions, no null-key skew
-    // at scale, and no collision is possible (a cluster label is a
-    // component member, so a doc with that id would be clustered too).
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(coalesce(col("cluster"), col("doc_id")))
+    val window = org.apache.spark.sql.expressions.Window
+    // One projection: the narrow output columns, the content hash and
+    // repetitionStats's gate as a flag. A doc under 2 tokens has no
+    // bigrams and passes: its null `bs` makes the flag null, read as
+    // false, and keeps ANSI division away from n = 0 or 1. `bs` is
+    // read four times, so its projection stays separate and
+    // bigramStats runs once per row.
+    val out = Seq("doc_id", "lang", "source", "n_chars").map(col)
+    val gated = Tables.documents(s, d)
+      .select(out :+ sha2(col("text"), 256).as("h") :+ split(col("text"), " ").as("t"): _*)
+      .select(out :+ col("h") :+ when(size(col("t")) >= 2, bigramStats(col("t"))).as("bs"): _*)
+      .select(out :+ col("h") :+ coalesce(
+          (col("bs")(0) - col("bs")(1)).cast("double") / col("bs")(0) > 0.95 ||
+            col("bs")(2).cast("double") / (col("bs")(0) - 1) > 0.5,
+          lit(false)).as("lowq"): _*)
+    // The sha256 election runs over every doc and the gate applies
+    // after it, and either order keeps the same set: the flag is a
+    // function of text alone and exact duplicates share their text
+    // (null texts share the null hash and all pass), so a hash group
+    // is gated whole and its min-id survivor is unchanged. Filtering
+    // above the window also keeps the optimizer from inlining the flag,
+    // and so bigramStats, into a pushed-down scan filter.
+    val preDedup = gated
+      .withColumn("rn", row_number().over(window.partitionBy(col("h")).orderBy(col("doc_id"))))
+      .filter(col("rn") === 1 && !col("lowq"))
+      .select(out: _*)
+    // Near-dup dedup over survivors: left-join the cluster labels and
+    // re-elect the representative per cluster AMONG THE DOCS STILL
+    // STANDING, so a cluster whose original rep was quality-filtered
+    // still keeps one copy. Unclustered docs window over their own
+    // doc_id — singleton partitions, no null-key skew at scale, and no
+    // collision is possible (a cluster label is a component member, so
+    // a doc with that id would be clustered too).
+    val w = window.partitionBy(coalesce(col("cluster"), col("doc_id")))
     // the labels frame is checkpoint-backed (CheckpointMemo) and a
     // checkpoint scan carries no stats, so without a hint this LEFT
     // join falls to sort-merge — sorting the whole corpus side against
@@ -208,7 +226,7 @@ object CurationOps {
       .withColumn("keep_id", min(col("doc_id")).over(w))
       .filter(col("doc_id") === col("keep_id"))
       .filter(samplePred(sampleHex))
-      .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
+      .select(out: _*)
       .orderBy(col("doc_id"))
   }
 

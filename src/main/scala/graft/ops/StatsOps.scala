@@ -1178,17 +1178,23 @@ object StatsOps {
     *               + d · N1+(w1 ·)/c(w1·) · N1+(· w2)/N1+(· ·)
     *
     * where N1+ are continuation-type counts. Everything derives from
-    * ONE vocabulary-bounded bigram-count aggregate: the left marginal
-    * (c(w1·), N1+(w1·)) and right continuation (N1+(·w2)) are
-    * aggregates OF that table, the type total is a 1-row broadcast,
-    * and the probability is one fixed expression tree over exact
-    * integers (identical parenthesization in both engines, ROUND(6)).
-    * Per-w1 mass telescopes to 1 over the FULL vocabulary — observed
-    * rows plus the backoff term for unobserved continuations — and
-    * the spec asserts exactly that identity.
+    * ONE vocabulary-bounded bigram-count table: the left marginal
+    * (c(w1·), N1+(w1·)) and right continuation (N1+(·w2)) are windows
+    * OVER that table's rows, the type total is a 1-row broadcast, and
+    * the probability is one fixed expression tree over exact integers
+    * (identical parenthesization in both engines, ROUND(6)). Per-w1
+    * mass telescopes to 1 over the FULL vocabulary — observed rows
+    * plus the backoff term for unobserved continuations — and the spec
+    * asserts exactly that identity.
     *
     * Scale: vocab-bounded throughout; the only corpus-sized pass is
-    * the bigram explode feeding the first aggregate. */
+    * the bigram explode feeding the first aggregate. Nothing joins
+    * back to the bigram table: it is checkpointed once per call for
+    * the spine and the type total to read, and the marginal windows
+    * shuffle on w1 and on w2, the keys a marginal aggregate would, so
+    * a hot word skews them alike. A warm call at sf0.001 runs 11 jobs
+    * and compiles 46 generated classes in a fresh cache
+    * (QueryJobBudgetSpec pins both). */
   def knBigramLm(s: SparkSession, d: String): DataFrame = {
     val bc = Tables.documents(s, d)
       .repartition(s.sparkContext.defaultParallelism)
@@ -1199,12 +1205,17 @@ object StatsOps {
           "i -> struct(element_at(tk, i) AS w1, element_at(tk, i + 1) AS w2))")).as("b"))
       .select(col("b.w1").as("w1"), col("b.w2").as("w2"))
       .groupBy(col("w1"), col("w2")).agg(count(lit(1)).as("c12"))
-    val left = bc.groupBy(col("w1"))
-      .agg(sum(col("c12")).as("c1"), count(lit(1)).as("nl"))
-    val right = bc.groupBy(col("w2")).agg(count(lit(1)).as("nr"))
+      // the spine and the type total both read the bigram table; AQE
+      // does not share exchanges between two branches over a cached
+      // table, so without the checkpoint the type total would re-run
+      // the scan, the repartition and the explode
+      .localCheckpoint()
+    val byW1 = org.apache.spark.sql.expressions.Window.partitionBy(col("w1"))
+    val byW2 = org.apache.spark.sql.expressions.Window.partitionBy(col("w2"))
     val types = bc.groupBy().agg(count(lit(1)).as("nt"))
-    bc.join(left.hint("shuffle_hash"), Seq("w1"))
-      .join(right.hint("shuffle_hash"), Seq("w2"))
+    bc.select(col("w1"), col("w2"), col("c12"),
+        sum(col("c12")).over(byW1).as("c1"), count(lit(1)).over(byW1).as("nl"),
+        count(lit(1)).over(byW2).as("nr"))
       .crossJoin(broadcast(types))
       .select(col("w1"), col("w2"), col("c12"),
         round(

@@ -58,17 +58,15 @@ object TextOps {
     * At 100 TB this is one shuffle on the 32-byte hash — the canonical
     * exact-dedup plan; MediaWiki does the same per-revision via sha1
     * (SURVEY.md §0.2). */
-  private[ops] def exactDedupCore(s: SparkSession, d: String): DataFrame = {
+  def exactDedup(s: SparkSession, d: String): DataFrame = {
     val w = Window.partitionBy(col("content_hash")).orderBy(col("doc_id"))
     Tables.documents(s, d)
       .withColumn("content_hash", sha2(col("text"), 256))
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1)
       .select(col("doc_id"), col("content_hash"))
+      .orderBy(col("doc_id"))
   }
-
-  def exactDedup(s: SparkSession, d: String): DataFrame =
-    exactDedupCore(s, d).orderBy(col("doc_id"))
 
   private val exactDedupSql =
     """SELECT doc_id, content_hash FROM (

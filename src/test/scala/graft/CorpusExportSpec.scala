@@ -163,6 +163,11 @@ class CorpusExportSpec extends AnyFunSuite with LocalSparkSuite {
     val dir = java.nio.file.Files.createTempDirectory("graftman").toString
     CorpusExport.exportJsonl(docs, dir, target)
     assert(CorpusExport.verifyExport(spark, dir).count() === 0)
+    // the diff is a local frame: EndToEndDemo reads it with
+    // collect(), which must run no job
+    val clean = CorpusExport.verifyExport(spark, dir)
+    val (diffRows, jobs) = jobsSubmittedBy(clean.collect())
+    assert(diffRows.isEmpty && jobs === 0)
     // corrupt one shard: drop a doc from the first json part found
     val part = new java.io.File(dir).listFiles().filter(_.isDirectory)
       .filterNot(_.getName.startsWith("_"))

@@ -123,6 +123,34 @@ class CurationSpec extends AnyFunSuite with LocalSparkSuite {
     assert(again === half)
   }
 
+  test("curateCorpus edge rows: short, empty and null texts, gated duplicates and representative") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graftcurate").toString
+    Seq[(Long, String)](
+      1L -> "alpha beta gamma delta epsilon",
+      2L -> "solo", // one token: no bigrams, so the gate passes it
+      3L -> "", // one empty token: passes the gate
+      4L -> null, 5L -> null, // the null hash is one group: only 4 survives exact dedup
+      6L -> "buy now buy now buy now", // top bigram 3/5: gated, and so is
+      7L -> "buy now buy now buy now", // its exact duplicate
+      8L -> "the quick brown fox jumps over the lazy dog",
+      10L -> "a b a b", // top bigram 2/3: gated, though it labels its near-dup cluster
+      11L -> "a b a b a", // top bigram 2/4 and duplicate words 3/5: both pass
+      12L -> "b a b a b") // same 3-shingle set as 10 and 11
+      .toDF("doc_id", "text")
+      .select(col("doc_id"), col("text"), lit("en").as("lang"), lit("src0").as("source"),
+        coalesce(length(col("text")), lit(0)).cast("long").as("n_chars"))
+      .write.parquet(s"$dir/documents.parquet")
+    val cluster = graft.ops.TextOps.dedupComponents(spark, dir).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(Seq(10L, 11L, 12L).map(cluster.get) === Seq.fill(3)(Some(10L)))
+    val out = CurationOps.curateCorpus(spark, dir).collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(3))).toSeq
+    // 11 is re-elected for the cluster whose original representative was gated
+    assert(out === Seq(1L -> 30L, 2L -> 4L, 3L -> 0L, 4L -> 0L, 8L -> 43L, 11L -> 9L)
+      .map { case (id, n) => (id, "en", "src0", n) })
+  }
+
   test("sequence packing fills greedily: budget respected, nothing lost, packs dense") {
     val out = CurationOps.sequencePacking(spark, sfDir).collect()
     // every doc appears exactly once

@@ -14,8 +14,9 @@ import org.apache.spark.sql.functions._
   *  1. replicate the dump's page block ×N byte-for-byte (a 5 KB
   *     fixture becomes a ~50 MB dump at N=10000) so the XML parse,
   *     not the fixture size, is what runs at scale;
-  *  2. ingest exactly like ImportDump: page scan → revision flatten →
-  *     namespace classify → sha1 verify → ns-partitioned parquet;
+  *  2. ingest with [[ImportDump.run]]: page scan → revision flatten →
+  *     namespace classify → sha1 verify → ns-partitioned parquet, plus
+  *     the namespace and page_latest tables;
   *     then run the A14 link-graph family on the ingested revisions
   *     (link extraction → distinct link graph → 3 PageRank rounds)
   *     and check rank-mass conservation;
@@ -78,14 +79,9 @@ object EndToEndDemo {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    // 2. ingest (the ImportDump path, inlined so the demo is one run)
-    val ns = MediaWikiXml.readNamespaces(spark, bigXml)
-    val classified = MediaWikiXml.verifySha1(
-      MediaWikiXml.classify(
-        MediaWikiXml.flattenRevisions(MediaWikiXml.readPages(spark, bigXml)), ns))
-    Sinks.writeParquetPartitioned(classified, s"$work/revision")
+    // 2. ingest: ImportDump's call sequence, in this session
+    val nRevisions = ImportDump.run(spark, bigXml, None, work, None).revisions
     val revisions = spark.read.parquet(s"$work/revision")
-    val nRevisions = revisions.count()
     val badSha = revisions.filter(!coalesce(col("sha1_ok"), lit(true))).count()
 
     // 2b. the A14 link-graph family at ingest scale: wikitext link

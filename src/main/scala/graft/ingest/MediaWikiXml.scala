@@ -67,7 +67,7 @@ object MediaWikiXml {
       .load(path)
 
   /** The declared `<namespace>` element schema — shared verbatim
-    * between the file reader below and q214's graded from_xml path
+    * between the header reader below and q214's graded from_xml path
     * (the same schema-sharing pin q206 uses for [[pageSchema]]). */
   val namespaceSchema: StructType = StructType(Seq(
     StructField("_VALUE", StringType),
@@ -75,19 +75,40 @@ object MediaWikiXml {
     StructField("_key", LongType)))
 
   /** Normalize a parsed `<namespace>` struct column set to the lookup
-    * columns — one place, so the file reader and q214 cannot drift. */
+    * columns — one place, so the header reader and q214 cannot drift. */
   def namespaceCols(df: DataFrame): DataFrame =
     df.select(col("_key").cast("int").as("ns_key"),
       coalesce(col("_VALUE"), lit("")).as("ns_name"),
       col("_case").as("ns_case"))
 
   /** A2: the `<siteinfo>` namespace map as a lookup table (the one
-    * [[classify]] looks revisions up in). key=0 has an empty name. */
-  def readNamespaces(spark: SparkSession, path: String): DataFrame =
-    namespaceCols(spark.read.format("xml")
-      .option("rowTag", "namespace")
-      .schema(namespaceSchema)
-      .load(path))
+    * [[classify]] looks revisions up in). key=0 has an empty name.
+    * Only the header is read, on the driver: bytes up to `</siteinfo>`
+    * (or the first `<page`, in a dump without one), one at a time so
+    * nothing past it is decoded; in a multistream dump that is bz2
+    * stream 0, and no page stream is touched. The codec comes from the
+    * file extension, through the codec lookup Spark's file readers use
+    * (`.bz2`, `.gz` or none). The frame is driver-local: building or
+    * collecting it submits no Spark job. */
+  def readNamespaces(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    val in = org.apache.spark.sql.execution.datasources.CodecStreams.createInputStream(
+      spark.sparkContext.hadoopConfiguration, new org.apache.hadoop.fs.Path(path))
+    // one char per byte (ISO-8859-1), re-decoded as UTF-8 below: the
+    // markers are ASCII, namespace names need not be
+    val sb = new java.lang.StringBuilder
+    def endsWith(m: String) = sb.length >= m.length && sb.indexOf(m, sb.length - m.length) >= 0
+    var b = 0
+    try while (!endsWith("</siteinfo>") && !endsWith("<page") && { b = in.read(); b >= 0 })
+      sb.append(b.toChar)
+    finally in.close()
+    val header = new String(sb.toString.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1),
+      java.nio.charset.StandardCharsets.UTF_8)
+    // namespace elements are self-closing or text-bearing
+    val elems = "<namespace\\b[^>]*(?:/>|>[^<]*</namespace>)".r.findAllIn(header).toSeq
+    namespaceCols(spark.createDataset(elems).toDF("xml")
+      .select(from_xml(col("xml"), namespaceSchema).as("n")).select(col("n.*")))
+  }
 
   /** A3–A8: normalize pages to revision grain with all union/presence
     * decodes applied — the golden flattened schema of FIXTURES.md §2.
@@ -151,7 +172,7 @@ object MediaWikiXml {
     * entries) is collected to the driver and looked up from a literal
     * map, with a LEFT join's rows: every revision once, its namespace's
     * other columns appended, NULL where `ns` has no entry. Collecting
-    * the header frame of [[Multistream.readNamespaces]] runs no Spark
+    * the header frame of [[readNamespaces]] runs no Spark
     * job, and the lookup adds no broadcast stage to the consuming job.
     * A null `ns_key` matches nothing, as in the join; a duplicated
     * one fails here, where the join would duplicate revisions. */

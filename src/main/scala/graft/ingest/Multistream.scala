@@ -190,66 +190,40 @@ object Multistream {
       }
     }
 
-  /** The header's XML: bz2 stream 0 by format, decoded on the driver
-    * by [[openStream]], which stops at that stream's end-of-stream
-    * marker and never reads a page stream. */
-  private def readHeaderStream(conf: org.apache.hadoop.conf.Configuration,
-      dumpPath: String): String = {
-    val r = openStream(conf, dumpPath, 0L)
-    try {
-      val sb = new java.lang.StringBuilder
-      val chunk = new Array[Char](64 * 1024)
-      var n = r.read(chunk)
-      while (n >= 0) { sb.append(chunk, 0, n); n = r.read(chunk) }
-      sb.toString
-    } finally r.close()
-  }
-
-  /** A2-multistream: the `<siteinfo>` namespace map from the HEADER
-    * stream only — bz2 stream 0, one tiny driver-side decode that reads
-    * neither the index nor the rest of the dump (the XML source on a
-    * multistream file would decode every stream just to find the
-    * header's namespace tags). Building the frame submits no Spark job.
-    * `indexPath` is unused: the header's extent is fixed by the bz2
-    * format, not by the index; the parameter keeps the signature
-    * parallel to [[readPages]]. Output matches
-    * [[MediaWikiXml.readNamespaces]] column-for-column. */
+  /** A2-multistream: [[MediaWikiXml.readNamespaces]], which decodes
+    * only the header (bz2 stream 0). `indexPath` is unused; it keeps
+    * the signature parallel to [[readPages]]. */
   def readNamespaces(spark: SparkSession, dumpPath: String,
-      indexPath: String): DataFrame = {
-    import spark.implicits._
-    val header = readHeaderStream(spark.sparkContext.hadoopConfiguration, dumpPath)
-    // namespace elements are self-closing or text-bearing
-    val elems = "<namespace\\b[^>]*(?:/>|>[^<]*</namespace>)".r
-      .findAllIn(header).toSeq
-    spark.createDataset(elems).toDF("xml")
-      .select(from_xml(col("xml"), org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("_VALUE",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("_case",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("_key",
-          org.apache.spark.sql.types.LongType)))).as("n"))
-      .select(col("n._key").cast("int").as("ns_key"),
-        coalesce(col("n._VALUE"), lit("")).as("ns_name"),
-        col("n._case").as("ns_case"))
-  }
+      indexPath: String): DataFrame =
+    MediaWikiXml.readNamespaces(spark, dumpPath)
 
   /** A1-multistream: page-grain scan of a multistream dump — the
     * parallel twin of [[MediaWikiXml.readPages]], one task per bz2
     * stream, identical output schema and rows. Lazy: building the frame
-    * submits no Spark job. */
+    * submits no Spark job.
+    *
+    * The offsets are dealt over about one slice per stream, estimated
+    * from the index's size in bytes (a file status call, not a job), at
+    * most ~4 waves per core so stream-size skew (some bz2 streams decode
+    * slower) back-fills. The estimate assumes Wikimedia's 100 pages per
+    * stream: at ~35 bytes per index line, a stream takes ~4 KiB of a
+    * text index and ~1 KiB of a `.bz2` one. The cap binds from
+    * ~`defaultParallelism * 4` streams up, so a real dump takes it; a
+    * small one gets no empty decode tasks. */
   def readPages(spark: SparkSession, dumpPath: String,
       indexPath: String): DataFrame = {
     import spark.implicits._
-    // round-robin the distinct offsets across ~4 waves per core so
-    // stream-size skew (some bz2 streams decode slower) back-fills
-    val slices = math.max(1, spark.sparkContext.defaultParallelism * 4)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val idx = new org.apache.hadoop.fs.Path(indexPath)
+    val perStream = if (indexPath.endsWith(".bz2")) 1024L else 4096L
+    val streams = (idx.getFileSystem(conf).getFileStatus(idx).getLen + perStream - 1) / perStream
+    val slices = math.min(math.max(1L, streams),
+      math.max(1, spark.sparkContext.defaultParallelism * 4).toLong).toInt
     // ship the DRIVER's Hadoop conf to the decode tasks — an
     // executor-side `new Configuration()` would drop object-store
     // credentials/endpoints set on the session
-    val bcConf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
-    val confBc = spark.sparkContext.broadcast(bcConf)
+    val confBc = spark.sparkContext.broadcast(
+      new org.apache.spark.util.SerializableConfiguration(conf))
     val pageXml = spark.createDataset(streamOffsetsRDD(spark, indexPath, slices)
       .flatMap(off => streamPagesAt(confBc.value.value, dumpPath, off)))
     pageXml.toDF("xml")

@@ -39,8 +39,8 @@ object Sinks {
       .load()
 
   /** Analytics-sink layout: partition by namespace (low cardinality,
-    * prunes every ns-filtered scan), sort within partitions by page_id
-    * so page-grain merges are sequential. At 100 TB add
+    * prunes every ns-filtered scan). Rows are written in the frame's
+    * own order, not sorted by page_id. At 100 TB add
     * `.bucketBy(1024, "page_id")` on a catalog table for co-located
     * joins. */
   def writeParquetPartitioned(df: DataFrame, path: String): Unit =

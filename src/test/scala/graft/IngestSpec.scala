@@ -63,6 +63,14 @@ class IngestSpec extends AnyFunSuite with LocalSparkSuite {
     assert(m === Map(-2 -> "Media", -1 -> "Special", 0 -> "", 1 -> "Talk", 2 -> "User"))
   }
 
+  test("A2 namespace table comes from the header, with no Spark job, plain or bz2") {
+    for (path <- Seq(dump, "src/test/resources/minidump.xml.bz2")) {
+      val (rows, jobs) = jobsSubmittedBy(MediaWikiXml.readNamespaces(spark, path).collect())
+      assert(jobs === 0, path)
+      assert(rows.toSeq === ns.collect().toSeq, path)
+    }
+  }
+
   test("A4 revision normalize: 9 revisions from 8 pages") {
     assert(flat.count() === 9)
   }

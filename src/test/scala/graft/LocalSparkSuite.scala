@@ -1,6 +1,7 @@
 package graft
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.{BeforeAndAfterAll, Suite}
 
@@ -30,18 +31,31 @@ trait LocalSparkSuite extends BeforeAndAfterAll { this: Suite =>
 
   val sfDir = "/root/testdata/sf0.001"
 
-  /** The Spark jobs `f` submits. The listener bus is asynchronous but
-    * ordered, so once a marked fence job submitted after `f` has ended,
-    * every job start before it has been counted. */
+  /** The Spark jobs `f` submits. */
   def jobsSubmittedBy[A](f: => A): (A, Int) = {
+    val (a, jobs, _) = workSubmittedBy(f)
+    (a, jobs)
+  }
+
+  /** The Spark jobs `f` submits and the tasks they run. The listener
+    * bus is asynchronous but ordered, so once a marked fence job
+    * submitted after `f` has ended, every job start and task end before
+    * it has been counted. */
+  def workSubmittedBy[A](f: => A): (A, Int, Int) = {
     val sc = spark.sparkContext
     val started = new java.util.concurrent.atomic.AtomicInteger
+    val tasks = new java.util.concurrent.atomic.AtomicInteger
     val fenceDone = new java.util.concurrent.CountDownLatch(1)
     @volatile var fenceId = -1
+    @volatile var fenceStages = Set.empty[Int]
     val listener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("graft.fence") != null)) fenceId = e.jobId
-        else started.incrementAndGet()
+        if (Option(e.properties).exists(_.getProperty("graft.fence") != null)) {
+          fenceStages = e.stageIds.toSet
+          fenceId = e.jobId
+        } else started.incrementAndGet()
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit =
+        if (!fenceStages.contains(e.stageId)) tasks.incrementAndGet()
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == fenceId) fenceDone.countDown()
     }
@@ -51,7 +65,7 @@ trait LocalSparkSuite extends BeforeAndAfterAll { this: Suite =>
       sc.setLocalProperty("graft.fence", "1")
       try sc.parallelize(Seq(1), 1).count() finally sc.setLocalProperty("graft.fence", null)
       assert(fenceDone.await(60, java.util.concurrent.TimeUnit.SECONDS), "fence job never ended")
-      (a, started.get)
+      (a, started.get, tasks.get)
     } finally sc.removeSparkListener(listener)
   }
 }

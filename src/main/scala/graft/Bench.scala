@@ -18,46 +18,12 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // Bench totals at sf0.1 are dominated by per-query fixed costs
-    // (generated-code compilation ~100 ms/query, per-stage job launch)
-    // plus this host's IO-wait noise (±20% run-to-run) — measured A/B:
-    // interpreted/AQE-off/narrow-shuffle variants are statistically
-    // indistinguishable here, so the defaults stay the scale-correct
-    // ones (whole-stage codegen + AQE on, a handful of shuffle
-    // partitions for sub-GB inputs). Env knobs allow overriding all
-    // three for experiments.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE",
-      math.min(cpus.toInt, 8).toString)
-    // AQE picks the effective width per stage: start every exchange at
-    // one partition per core and let coalescing shrink it to the data.
-    // Clean-window sweep at the 10x corpus (sentinels verified, n=2,
-    // probes q18/q20/q92/q101): 32 ties-or-beats 8 on every probe
-    // (q92 1.29 s vs 1.71) while 128 loses 2-9x on ALL of them (q92
-    // 11.5 s, q18 4.5 s) — wide exchanges of small-ish data buy task
-    // overhead, not parallelism, and AQE can only coalesce DOWN from
-    // the initial number, never widen. An earlier 4x-cores default
-    // was justified by a q92 74-105 s measurement at width 8 that a
-    // clean window does not reproduce — contention, not width.
-    // shuffle.partitions stays the AQE-off fallback knob — but an
-    // EXPLICIT wider SPARK_GRAFT_SHUFFLE must also widen the AQE
-    // initial width, or the scale recipes silently run every exchange
-    // at cpu-width: the round-14 1000x window set SHUFFLE=512 yet
-    // executed 32-wide, and q92's pinned hash build OOMed at 16x the
-    // per-partition size its guard had modeled. AQE can only coalesce
-    // DOWN, so max(cpus, shuffle) is safe at every scale.
-    val initParts = sys.env.getOrElse("SPARK_GRAFT_INIT_PARTS",
-      math.max(cpus.toInt, shuffle.toInt).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.adaptive.coalescePartitions.initialPartitionNum", initParts)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.codegen.wholeStage", sys.env.getOrElse("SPARK_GRAFT_WSCG", "true"))
-      .config(Tables.NanosConf, "true")
-      .getOrCreate()
+    val cpus = Session.cores
+    // SCALING.md's scale recipes widen the exchanges through
+    // SPARK_GRAFT_SHUFFLE and SPARK_GRAFT_INIT_PARTS (Session.query)
+    val spark = Session.start(Session.query(cpus,
+      sys.env.get("SPARK_GRAFT_SHUFFLE").map(_.toInt),
+      sys.env.get("SPARK_GRAFT_INIT_PARTS").map(_.toInt)))
     spark.sparkContext.setLogLevel("WARN")
     // scale-run knob (SCALING.md round-14): pin the recall-eval query
     // sample to a fixed count — the |Q|×N ground truth is quadratic
@@ -69,10 +35,6 @@ object Bench {
     // sample the grading join 1/f by key, scale the count back by f.
     sys.env.get("SPARK_GRAFT_GRADER_SAMPLE_MOD")
       .foreach(c => spark.conf.set("spark.graft.graderSampleMod", c))
-    // pin the Hamming band layout (quad|triple; default auto) — for
-    // isolated A/B of the two schemes at scale corpora
-    sys.env.get("SPARK_GRAFT_HAMMING_BANDS")
-      .foreach(c => spark.conf.set("spark.graft.hammingBands", c))
     // session-scoped base-table cache: the suite reads each table ~25x,
     // so the bench session keeps them materialized (the buffer-pool
     // behavior any single-node engine gets for free) — but ONLY while
@@ -133,7 +95,7 @@ object Bench {
     // all-cores wall time is exactly the resource a stage needs.
     def sentinelOnce(): Double = {
       val t0 = System.nanoTime()
-      val threads = (1 to cpus.toInt).map { _ =>
+      val threads = (1 to cpus).map { _ =>
         new Thread(() => {
           var h = 0x811c9dc5L
           var i = 0L
@@ -342,7 +304,7 @@ object Bench {
                   else java.nio.file.Paths.get(refSf).getFileName.toString
                 val refCpus = node.path("cpus").asInt(32)
                 if (node.path("clean").asBoolean(true) && refClass == sfClass
-                    && refCpus == cpus.toInt)
+                    && refCpus == cpus)
                   Some((p, node))
                 else None
               } catch { case NonFatal(_) => None }
@@ -696,7 +658,7 @@ object Bench {
     // value_cold = value + memo_build_s (VERDICT_r16 #6): the number a
     // memo-shift can never improve — every memo-backed claim must cite
     // it. cpus rides along so bench_refs floors can be core-classed.
-    val summary = s""""metric":"total","value":${fmt(total)},"unit":"sec","errors":$errors,"passes":$repeat,"clean":$clean,"cpus":${cpus.toInt},"dirty_rerun":$rerun,"cold_total":${fmt(coldSum)},"value_cold":${fmt(total + memoBuildS)},"memo_build_s":${fmt(memoBuildS)},"memo_builds":$memoBuilds,"sentinel_pre":${fmt(sentinelPre)},"sentinel_post":${fmt(sentinelPost)},"sentinel_max":${fmt(sentinelMax)},"io_pre":${fmt(ioPre)},"io_post":${fmt(ioPost)},"io_max":${fmt(ioMax)},"gc_sec":${fmt(gcSec)},"cache_gb_pre":${fmt(cacheGbPre)},"cache_gb_post":${fmt(cachedGb())}$rerunFields,"slowest":$slowest,"dominant":$dominant,"regressions":$regressions,"band_ratio":${fmt(bandRatio)},"sf":"$sfDir""""
+    val summary = s""""metric":"total","value":${fmt(total)},"unit":"sec","errors":$errors,"passes":$repeat,"clean":$clean,"cpus":$cpus,"dirty_rerun":$rerun,"cold_total":${fmt(coldSum)},"value_cold":${fmt(total + memoBuildS)},"memo_build_s":${fmt(memoBuildS)},"memo_builds":$memoBuilds,"sentinel_pre":${fmt(sentinelPre)},"sentinel_post":${fmt(sentinelPost)},"sentinel_max":${fmt(sentinelMax)},"io_pre":${fmt(ioPre)},"io_post":${fmt(ioPost)},"io_max":${fmt(ioMax)},"gc_sec":${fmt(gcSec)},"cache_gb_pre":${fmt(cacheGbPre)},"cache_gb_post":${fmt(cachedGb())}$rerunFields,"slowest":$slowest,"dominant":$dominant,"regressions":$regressions,"band_ratio":${fmt(bandRatio)},"sf":"$sfDir""""
     val fullJson = s"""{"queries":$qs,$summary}"""
     // ALL warnings print (and stderr flushes) BEFORE the JSON lines:
     // the driver keeps a bounded tail of the COMBINED capture and
@@ -739,7 +701,7 @@ object Bench {
     // is unchanged in line 1 and in the canonical BENCH.json file.
     // compact core only (memo_builds/slowest/regressions/per-window
     // fields live in line 1 + BENCH.json) so ~45 query entries fit
-    val compactSummary = s""""metric":"total","value":${fmt(total)},"unit":"sec","errors":$errors,"passes":$repeat,"clean":$clean,"cpus":${cpus.toInt},"dirty_rerun":$rerun,"cold_total":${fmt(coldSum)},"value_cold":${fmt(total + memoBuildS)},"memo_build_s":${fmt(memoBuildS)},"sentinel_max":${fmt(sentinelMax)},"io_max":${fmt(ioMax)},"gc_sec":${fmt(gcSec)},"band_ratio":${fmt(bandRatio)},"sf":"$sfDir""""
+    val compactSummary = s""""metric":"total","value":${fmt(total)},"unit":"sec","errors":$errors,"passes":$repeat,"clean":$clean,"cpus":$cpus,"dirty_rerun":$rerun,"cold_total":${fmt(coldSum)},"value_cold":${fmt(total + memoBuildS)},"memo_build_s":${fmt(memoBuildS)},"sentinel_max":${fmt(sentinelMax)},"io_max":${fmt(ioMax)},"gc_sec":${fmt(gcSec)},"band_ratio":${fmt(bandRatio)},"sf":"$sfDir""""
     val tailBudget = 1900 - (compactSummary.length + "{,\"queries\":{}}".length)
     val compactQs = {
       val sb = new StringBuilder

@@ -3,22 +3,53 @@ package graft
 import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.execution.FormattedMode
 
-/** Dumps formatted physical plans for representative queries to
-  * PLANS.md — reviewable evidence that filters push down, dimensions
+/** Dumps formatted physical plans in Bench's session posture
+  * ([[Session.query]]).
+  *
+  * With no arguments it writes PLANS.md: representative queries at
+  * sf0.001 — reviewable evidence that filters push down, dimensions
   * broadcast, top-k avoids global sorts, and the hot paths stay inside
-  * whole-stage codegen. Regenerate: sbt "runMain graft.PlanDump". */
+  * whole-stage codegen. Regenerate: sbt "runMain graft.PlanDump".
+  *
+  * With `<outDir> <suffix> <q1,q2,...|all>` it writes one file per
+  * named query, `<outDir>/<q>_<suffix>.txt`, so a measurement loop can
+  * capture the exact plans it timed (suffix "before" | "after"; the
+  * corpus is SPARK_GRAFT_SF_DIR, default sf0.001 — plan SHAPE is
+  * SF-independent, only stats differ). */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config(Tables.NanosConf, "true")
-      .getOrCreate()
+    require(args.isEmpty || args.length == 3,
+      "usage: PlanDump [<outDir> <suffix> <q1,q2,...|all>]")
+    val spark = Session.start(Session.query(Session.cores))
     spark.sparkContext.setLogLevel("ERROR")
     val d = "/root/testdata/sf0.001"
+    args match {
+      case Array(outDir, suffix, list) =>
+        perQuery(spark, sys.env.getOrElse("SPARK_GRAFT_SF_DIR", d), outDir, suffix, list)
+      case _ => plansMd(spark, d)
+    }
+    CheckpointMemo.clear()
+    spark.stop()
+  }
+
+  private def perQuery(spark: SparkSession, d: String, outDir: String, suffix: String,
+      list: String): Unit = {
+    val names =
+      if (list == "all") SparkEntry.queries.keys.toSeq.sorted
+      else list.split(',').toSeq
+    Files.createDirectories(Paths.get(outDir))
+    names.foreach { n =>
+      val fn = SparkEntry.queries.getOrElse(n,
+        sys.error(s"unknown query $n"))
+      val plan = fn(spark, d).queryExecution.explainString(FormattedMode)
+      Files.writeString(Paths.get(outDir, s"${n}_$suffix.txt"), plan)
+      println(s"[plandump] wrote $outDir/${n}_$suffix.txt")
+    }
+  }
+
+  private def plansMd(spark: SparkSession, d: String): Unit = {
     val picks = Seq(
       "q02_filter_scan" -> "B2: predicates reach the parquet scan (PushedFilters)",
       "q04_revenue_by_nation" -> "B4: dimensions broadcast, fact join shuffles once",
@@ -105,8 +136,7 @@ object PlanDump {
     sb.append("# PLANS — physical-plan evidence (sf0.001, regenerate via `sbt \"runMain graft.PlanDump\"`)\n")
     picks.foreach { case (name, why) =>
       val df = SparkEntry.queries(name)(spark, d)
-      val plan = df.queryExecution.explainString(
-        org.apache.spark.sql.execution.FormattedMode)
+      val plan = df.queryExecution.explainString(FormattedMode)
       sb.append(s"\n## $name — $why\n\n```\n$plan```\n")
     }
     // iterative family (q76/q79/q84): the per-round plans live BEHIND
@@ -123,7 +153,7 @@ object PlanDump {
     val unrolled = try {
       spark.conf.set("spark.sql.adaptive.enabled", "false")
       ops.TextOps.fixpointUnrolledPlan(spark, d)
-        .queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
+        .queryExecution.explainString(FormattedMode)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
     sb.append("\n## fixpoint internals (q76/q79/q84) — the unrolled " +
       "double-round clustering plan: one job runs both propagation " +
@@ -131,7 +161,5 @@ object PlanDump {
       unrolled + "```\n")
     Files.writeString(Paths.get("PLANS.md"), sb.toString)
     println("wrote PLANS.md")
-    CheckpointMemo.clear()
-    spark.stop()
   }
 }

@@ -68,9 +68,9 @@ object Tables {
   /** Early driver corpora wrote events.ts as INT64 TIMESTAMP(NANOS),
     * which Spark 4 refuses to read as a timestamp; sessions set this so
     * that encoding arrives as raw nanos (harmless when the corpus uses
-    * µs). Belongs at session CONSTRUCTION (Bench/Verify/PlanDump/test
-    * builders all set it) — a table loader must never mutate session
-    * state as a side effect. */
+    * µs). Belongs at session CONSTRUCTION (one of [[Session.shared]]'s
+    * keys) — a table loader must never mutate session state as a side
+    * effect. */
   val NanosConf = "spark.sql.legacy.parquet.nanosAsLong"
 
   /** events.ts, normalized to TimestampType regardless of the corpus

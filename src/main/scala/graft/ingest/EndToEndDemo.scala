@@ -1,7 +1,8 @@
 package graft.ingest
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.Session
 
 /** The reference's identity, end-to-end in one run: a MediaWiki XML
   * dump goes in, a curated, size-bounded, manifest-verified JSONL
@@ -57,26 +58,17 @@ object EndToEndDemo {
   }
 
   def main(args: Array[String]): Unit = {
-    require(args.length >= 2, "usage: EndToEndDemo <dump.xml> <workDir> [replicas]")
+    require(args.length >= 2 && args.length <= 3, "usage: EndToEndDemo <dump.xml> <workDir> [replicas]")
     val Array(dump, work) = args.take(2)
     val replicas = args.lift(2).map(_.toInt).getOrElse(10000)
+    require(replicas > 0, s"replicas must be positive, got $replicas")
     val t0 = System.nanoTime()
 
     val bigXml = s"$work/dump_x$replicas.xml"
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(work))
     val xmlBytes = replicateDump(dump, bigXml, replicas)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[32]"))
-      .appName("graft-end-to-end")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      // XML parse is the CPU-bound stage: split well under the 128 MB
-      // default so every core parses even a mid-size dump
-      .config("spark.sql.files.maxPartitionBytes", 4L * 1024 * 1024)
-      .config(graft.Tables.NanosConf, "true")
-      .getOrCreate()
+    val spark = Session.start(Session.ingest(Session.cores))
     spark.sparkContext.setLogLevel("WARN")
 
     // 2. ingest: ImportDump's call sequence, in this session

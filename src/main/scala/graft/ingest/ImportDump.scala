@@ -3,6 +3,8 @@ package graft.ingest
 import org.apache.spark.sql.{Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.Session
+
 /** The reference's CLI, Spark-native: import a MediaWiki pages dump
   * into relational sinks in one run (SURVEY.md §3.1 lifecycle →
   * one declarative pipeline).
@@ -66,16 +68,8 @@ object ImportDump {
       case "--index" +: i +: r => (Some(i), r)
       case r => (None, r)
     }
-    require(rest.length >= 2 && !rest.contains("--index"), usage)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[4]"))
-      .appName("graft-import")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // XML is CPU-bound at ~10 MB/s/core: split uncompressed dumps
-      // finer than the 128 MB default so every core parses.
-      .config("spark.sql.files.maxPartitionBytes", 32L * 1024 * 1024)
-      .getOrCreate()
+    require(rest.length >= 2 && rest.length <= 3 && !rest.contains("--index"), usage)
+    val spark = Session.start(Session.ingest(Session.cores))
     spark.sparkContext.setLogLevel("WARN")
     val Seq(dump, outDir) = rest.take(2)
     val counts = run(spark, dump, index, outDir, rest.lift(2))

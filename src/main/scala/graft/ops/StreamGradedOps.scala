@@ -181,13 +181,11 @@ object StreamGradedOps {
     * commit round-trips per run for 720 rows of state; the 1000×
     * recipe (512-wide session) would have paid 10k+. Capped at the
     * session width so a genuinely huge stream still gets the full
-    * configured parallelism; SPARK_GRAFT_STREAM_STATE_PARTS overrides
-    * for A/B. */
-  private def streamShuffleParts(s: SparkSession, rows: Long): Int =
-    sys.env.get("SPARK_GRAFT_STREAM_STATE_PARTS").map(_.toInt).getOrElse {
-      val cap = s.sessionState.conf.numShufflePartitions
-      math.max(1L, math.min(cap.toLong, rows / 4000000L + 1L)).toInt
-    }
+    * configured parallelism. */
+  private def streamShuffleParts(s: SparkSession, rows: Long): Int = {
+    val cap = s.sessionState.conf.numShufflePartitions
+    math.max(1L, math.min(cap.toLong, rows / 4000000L + 1L)).toInt
+  }
 
   /** A session clone whose shuffle width is the stream's state width —
     * session-LOCAL conf, so the caller's session never mutates (the
@@ -265,9 +263,6 @@ object StreamGradedOps {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[q207] batch ${p.batchId} rows=${p.numInputRows} " + p.durationMs))
     } finally { deleteQuietly(ckpt); release() }
     // the returned frame reads the Derby table, not the staged files —
     // safe to clean the staging dirs before the caller materializes it
@@ -341,9 +336,6 @@ object StreamGradedOps {
         .trigger(Trigger.AvailableNow())
         .start()
       q.awaitTermination()
-      if (sys.env.contains("SPARK_GRAFT_STREAM_PROFILE"))
-        q.recentProgress.foreach(p => System.err.println(
-          s"[q213] batch ${p.batchId} rows=${p.numInputRows} " + p.durationMs))
     } finally { deleteQuietly(ckpt); release() }
     Sinks.readJdbc(s, url, table)
       .select(col("imp_id").cast("long"), col("click_id").cast("long"),

@@ -15,13 +15,7 @@ object GraftProps extends Properties("graft") {
   override def overrideParameters(p: Test.Parameters): Test.Parameters =
     p.withMinSuccessfulTests(8)
 
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config(Tables.NanosConf, "true")
-    .getOrCreate()
+  private lazy val spark: SparkSession = Session.start(Session.query(4))
 
   private def md5hex(s: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -27,8 +27,9 @@ object Session {
     * dominated by per-query fixed costs (code generation ~100 ms per
     * query, per-stage job launch) plus host IO-wait noise, and an A/B of
     * interpreted, AQE-off and narrow-shuffle variants could not tell
-    * them apart, so the scale-correct defaults stay: whole-stage codegen
-    * and AQE on, `min(cores, 8)` shuffle partitions.
+    * them apart, so the scale-correct defaults stay: Spark's whole-stage
+    * codegen and AQE (both on by default), `min(cores, 8)` shuffle
+    * partitions.
     *
     * AQE picks each stage's width by coalescing down from
     * `initialPartitionNum`, never up. A clean-window sweep at the 10x
@@ -47,9 +48,7 @@ object Session {
     shared(cores) ++ Map(
       "spark.sql.shuffle.partitions" -> width.toString,
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum" ->
-        initialParts.getOrElse(math.max(cores, width)).toString,
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.codegen.wholeStage" -> "true")
+        initialParts.getOrElse(math.max(cores, width)).toString)
   }
 
   /** Dump import. XML parsing is CPU-bound at ~10 MB/s per core, so

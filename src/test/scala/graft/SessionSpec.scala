@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The session postures as conf maps, and the entry points' argument
@@ -29,9 +30,10 @@ class SessionSpec extends AnyFunSuite {
       "spark.sql.adaptive.coalescePartitions.initialPartitionNum" -> initial.toString,
       "spark.sql.session.timeZone" -> "UTC",
       "spark.ui.enabled" -> "false",
-      "spark.sql.adaptive.enabled" -> "true",
-      "spark.sql.codegen.wholeStage" -> "true",
       Tables.NanosConf -> "true")
+    // Bench also set AQE and whole-stage codegen on, Spark's defaults
+    assert(SQLConf.ADAPTIVE_EXECUTION_ENABLED.defaultValue === Some(true))
+    assert(SQLConf.WHOLESTAGE_CODEGEN_ENABLED.defaultValue === Some(true))
     assert(Session.query(4) === bench(4, 4, 4))
     assert(Session.query(32) === bench(32, 8, 32))
     // the scale recipes' overrides: a wider shuffle widens the initial width

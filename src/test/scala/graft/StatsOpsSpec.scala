@@ -150,11 +150,20 @@ class StatsOpsSpec extends AnyFunSuite with LocalSparkSuite {
     assert(top.length === 20)
     val scores = top.map(_.getDouble(1))
     assert(scores.sameElements(scores.sortBy(-(_: Double))))
+    // with AQE on, a set initialPartitionNum (the query posture sets
+    // it) wins over shuffle.partitions, so the wide run sets both
     val wide = {
-      val prev = spark.conf.get("spark.sql.shuffle.partitions")
-      spark.conf.set("spark.sql.shuffle.partitions", "13")
-      try ops.StatsOps.pageRank(spark, sfDir).collect().toSeq
-      finally spark.conf.set("spark.sql.shuffle.partitions", prev)
+      val keys = Seq("spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.coalescePartitions.initialPartitionNum")
+      val prev = keys.map(k => k -> spark.conf.getOption(k))
+      keys.foreach(spark.conf.set(_, "13"))
+      try {
+        assert(spark.sessionState.conf.numShufflePartitions === 13)
+        ops.StatsOps.pageRank(spark, sfDir).collect().toSeq
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
     }
     assert(wide === top, "pagerank values depend on partitioning")
   }
